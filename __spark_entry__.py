@@ -42,6 +42,7 @@ from cms_topn_spark.functions.sketch_api import (
 )
 from cms_topn_spark.operators import dedup, similarity, textops
 from cms_topn_spark.operators.build import build_partials
+from cms_topn_spark.sources.parquet_direct import ParquetSource
 
 
 _PYFILES_SESSIONS: set = set()
@@ -123,11 +124,11 @@ def q_hll_distinct_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_hll_users_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-type distinct users through the two-level scale form
-    (operators/grouped.py grouped_distinct) rather than
-    groupwise_estimate's whole-rows-to-one-task shuffle: with only a
-    handful of event types the groupwise form caps parallelism at the
-    group count AND exchanges every raw row; the grouped form folds HLL
-    states shuffle-free at scan parallelism and exchanges states only.
+    (operators/grouped.py grouped_distinct) rather than a whole-rows-to-
+    one-task shuffle: with only a handful of event types that shape caps
+    parallelism at the group count AND exchanges every raw row; the
+    grouped form folds HLL states shuffle-free at scan parallelism and
+    exchanges states only.
     Identical estimates — HLL union (sparse-exact sets / dense register
     max) is order-independent, and the packed int64 ingest applies the
     same item encoding (§2.1 #10) as the driver-level hll_add_agg."""
@@ -174,9 +175,9 @@ def q_tdigest_median_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-type t-digest median through the two-level scale form
     (operators/grouped.py grouped_estimate): stage 1 folds per-(task, group)
     digests shuffle-free, stage 2 exchanges DIGEST STATES (not rows) and
-    reads the median out fused. The prior groupwise form shuffled all rows
-    of each of the 5 event types to a single task — a parallelism-5 ceiling
-    and this query's r5 noise sensitivity. In the exact regime (delta ≥ πN
+    reads the median out fused. Shuffling all rows of each of the 5 event
+    types to a single task would set a parallelism-5 ceiling (this query's
+    r5 noise sensitivity). In the exact regime (delta ≥ πN
     ⇒ every centroid a singleton) the merged digest holds the identical
     sorted value multiset whatever the merge order, so quantile(0.5) is
     bitwise quantile_cont and partitioning-invariant."""
@@ -1072,19 +1073,19 @@ def q_grouped_kll_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantile equals DuckDB quantile_cont bitwise (the exact regime; the
     compacting path is pytest-covered).
 
-    Physical ingest (round-7 verdict #5): this entry runs the COLUMNAR-
-    DIRECT source (grouped_quantiles_parquet) — the library's best physical
+    Physical ingest (round-7 verdict #5): this entry runs grouped_quantiles
+    over a COLUMNAR-DIRECT ParquetSource — the library's best physical
     plan for a parquet-backed fold, skipping Spark's columnar→row→Arrow
     double pivot that measured ~8× the scan's own CPU and anti-scales with
     task threads. Same fold, same states-only exchange, same bitwise
-    oracle; the generic DataFrame-ingest form (grouped.grouped_quantiles)
-    stays first-class — pytest-oracled in tests/test_grouped.py and gated
+    oracle; the DataFrame input to the same grouped_quantiles stays
+    first-class — pytest-oracled in tests/test_grouped.py and gated
     through the grouped_estimate entries (tdigest_median_by_type,
     hll_users_by_type) and grouped_kll_quantiles_filtered."""
-    from cms_topn_spark.operators.grouped import grouped_quantiles_parquet
+    from cms_topn_spark.operators.grouped import grouped_quantiles
 
-    return grouped_quantiles_parquet(
-        spark, os.path.join(sf_dir, "events.parquet"), "user_id", "value", k=4096
+    return grouped_quantiles(
+        ParquetSource(os.path.join(sf_dir, "events.parquet")), "user_id", "value", k=4096
     )
 
 
@@ -1110,8 +1111,8 @@ def q_grouped_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_grouped_kll_quantiles_direct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAME per-group quantiles through the COLUMNAR-DIRECT ingest
-    (sources/parquet_direct.py + grouped_quantiles_parquet): each task reads
-    its own parquet split with pyarrow and folds it, skipping Spark's
+    (grouped_quantiles over a sources/parquet_direct.py ParquetSource): each
+    task reads its own parquet split with pyarrow and folds it, skipping Spark's
     columnar→row→Arrow double pivot. Measured on this box the pivot is the
     operator's dominant cost at scale (~8× the scan's own CPU) and its
     per-thread throughput drops ~2.6× from 2 to 8 task threads, capping the
@@ -1119,10 +1120,10 @@ def q_grouped_kll_quantiles_direct(spark: SparkSession, sf_dir: str) -> DataFram
     fold's own scaling (bench.py query-scaling section). Same fold, same
     states-only exchange, same readout — and the same quantile_cont oracle,
     which this entry passes bitwise like the DataFrame form."""
-    from cms_topn_spark.operators.grouped import grouped_quantiles_parquet
+    from cms_topn_spark.operators.grouped import grouped_quantiles
 
-    return grouped_quantiles_parquet(
-        spark, os.path.join(sf_dir, "events.parquet"), "user_id", "value", k=4096
+    return grouped_quantiles(
+        ParquetSource(os.path.join(sf_dir, "events.parquet")), "user_id", "value", k=4096
     )
 
 
@@ -1138,11 +1139,14 @@ def q_grouped_kll_quantiles_filtered(spark: SparkSession, sf_dir: str) -> DataFr
     semantics; the filter column is read for the mask and dropped before the
     fold. Exact regime as grouped_kll_quantiles ⇒ bitwise quantile_cont
     oracle with the same WHERE."""
-    from cms_topn_spark.operators.grouped import grouped_quantiles_parquet
+    from cms_topn_spark.operators.grouped import grouped_quantiles
 
-    return grouped_quantiles_parquet(
-        spark, os.path.join(sf_dir, "events.parquet"), "user_id", "value",
-        k=4096, filters=[("event_type", "==", "click")],
+    return grouped_quantiles(
+        ParquetSource(
+            os.path.join(sf_dir, "events.parquet"),
+            filters=[("event_type", "==", "click")],
+        ),
+        "user_id", "value", k=4096,
     )
 
 
@@ -1168,18 +1172,17 @@ def q_corpus_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_corpus_profile_direct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The one-scan composite profile through the COLUMNAR-DIRECT ingest
-    (plans/profile.py corpus_profile_parquet → build.sketch_agg_parquet):
+    (plans/profile.py corpus_profile → build.sketch_agg over a ParquetSource):
     one partial CMS+HLL+KLL composite state per parquet file, pyarrow-pruned
     to the text column, no JVM row pivot — the GLOBAL-build analogue of
     grouped_kll_quantiles_direct, showing the direct path generalizes to
     the flagship north-star shape. Same composite fold, same merge, same
     multi-subquery oracle as corpus_profile. Same ``n_tokens=64`` tie-width
     headroom as q_corpus_profile."""
-    from cms_topn_spark.plans.profile import corpus_profile_parquet
+    from cms_topn_spark.plans.profile import corpus_profile
 
-    p = corpus_profile_parquet(
-        spark, os.path.join(sf_dir, "documents.parquet"), n_tokens=64
-    )
+    src = ParquetSource(os.path.join(sf_dir, "documents.parquet"))
+    p = corpus_profile(src, n_tokens=64)
     return _profile_df(spark, p)
 
 
@@ -1783,7 +1786,7 @@ def _raw_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # lang_id→lang_id_ngram, simhash_docs→simhash_near_pairs (scheme
     # bit-exact in pytest), corpus_profile→corpus_profile_direct (identical
     # oracle SQL), grouped_kll_quantiles_direct→grouped_kll_quantiles +
-    # grouped_kll_quantiles_filtered (same grouped_quantiles_parquet),
+    # grouped_kll_quantiles_filtered (same grouped_quantiles over a ParquetSource),
     # grouped_user_freq→grouped_topn (same grouped-states machinery),
     # incremental_dedup→bloom_customer_semijoin (same Bloom mechanism) +
     # exact_dedup (digest mechanism), doc_fingerprints→winnow_fingerprints,

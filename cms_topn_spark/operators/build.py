@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame
 
 from ..core import encoding as enc
 from ..core.base import merge_serialized, sketch_from_bytes
+from ..sources.parquet_direct import Source, map_source, source_partitions
 
 STATE_SCHEMA = "partition_id int, state binary, input_rows long, build_wall_ms long"
 
@@ -177,8 +178,7 @@ def _partials_fold(
     factory: Callable[[], object],
     ingest: Callable[[object, pa.RecordBatch], None],
 ) -> Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]:
-    """The one-state-per-task fold as a batches→batches kernel, shared by
-    the DataFrame path and the columnar-direct parquet path."""
+    """The one-state-per-task fold as a batches→batches kernel."""
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         t0 = time.monotonic()
@@ -203,46 +203,25 @@ def _partials_fold(
 
 
 def build_partials(
-    df: DataFrame,
+    src: Source,
     factory: Callable[[], object],
     ingest: Callable[[object, pa.RecordBatch], None] = default_ingest,
     salt_partitions: int | None = None,
+    columns: list[str] | None = None,
 ) -> DataFrame:
-    """One serialized partial sketch per partition of ``df``.
+    """One serialized partial sketch per partition of a DataFrame ``src``,
+    or per split of a ``sources.parquet_direct.ParquetSource``
+    (columnar-direct: pyarrow reads the pruned columns in the worker, and
+    the batches never cross Spark's columnar→row→Arrow pivot — the transfer
+    whose JVM CPU anti-scales with task threads, BENCH/BASELINE.md §2b).
 
-    ``df`` should already be projected to exactly the columns ``ingest``
-    consumes (column pruning then reaches the parquet scan)."""
+    ``columns`` are the columns ``ingest`` consumes — required for a
+    ParquetSource; a DataFrame left at ``None`` should already be projected
+    to them (column pruning then reaches the parquet scan).
+    ``salt_partitions`` round-robins a DataFrame first."""
     if salt_partitions:
-        df = df.repartition(salt_partitions)  # round-robin = salt
-    return df.mapInArrow(_partials_fold(factory, ingest), STATE_SCHEMA)
-
-
-def build_partials_parquet(
-    spark,
-    path: str,
-    columns: list[str],
-    factory: Callable[[], object],
-    ingest: Callable[[object, pa.RecordBatch], None] = default_ingest,
-    files: list[str] | None = None,
-    split_row_groups: bool = False,
-    splits: list[tuple[str, int]] | None = None,
-    filters: list[tuple] | None = None,
-) -> DataFrame:
-    """:func:`build_partials` over a parquet path via the COLUMNAR-DIRECT
-    ingest (sources/parquet_direct.py): one task per file, pyarrow reads the
-    pruned columns in the worker, and the batches never cross Spark's
-    columnar→row→Arrow pivot — the transfer whose JVM CPU anti-scales with
-    task threads (measured in BENCH/BASELINE.md §2b). Same states frame,
-    same merge machinery. ``filters`` push (column, op, literal) conjuncts
-    into the scan: statistics-pruned splits plus a columnar residual mask
-    (see parquet_direct.map_parquet_batches)."""
-    from ..sources.parquet_direct import map_parquet_batches
-
-    return map_parquet_batches(
-        spark, path, columns, _partials_fold(factory, ingest), STATE_SCHEMA,
-        files=files, split_row_groups=split_row_groups, splits=splits,
-        filters=filters,
-    )
+        src = src.repartition(salt_partitions)  # round-robin = salt
+    return map_source(src, columns, _partials_fold(factory, ingest), STATE_SCHEMA)
 
 
 def _merge_group(pdf):
@@ -294,12 +273,13 @@ def tree_merge_df(states: DataFrame, fanin: int = 16) -> DataFrame:
 
 
 def sketch_agg(
-    df: DataFrame,
+    src: Source,
     factory: Callable[[], object],
     ingest: Callable[[object, pa.RecordBatch], None] = default_ingest,
     salt_partitions: int | None = None,
     fanin: int = 16,
     direct_collect_limit: int = 64,
+    columns: list[str] | None = None,
 ):
     """Full add_agg analogue: build partials, tree-merge, return the sketch.
 
@@ -309,38 +289,14 @@ def sketch_agg(
     For moderate partition counts the partials are collected in ONE action and
     merged on the driver (P sketch-sized rows; merging is O(P·d·w) numpy adds,
     microseconds per state). The shuffle tree only pays off when P is large —
-    at 1000-executor scale — so it kicks in above ``direct_collect_limit``."""
-    states = build_partials(df, factory, ingest, salt_partitions)
-    n_parts = (
-        plan_num_partitions(df) if salt_partitions is None else salt_partitions
-    )
+    at 1000-executor scale — so it kicks in above ``direct_collect_limit``.
+    P is the DataFrame's partition count, or a ParquetSource's split count
+    (one partial per file, or per row group) — the same split list feeds
+    the tasks, so its footers are read once. No sharding: a small input
+    stays one partial per split."""
+    states = build_partials(src, factory, ingest, salt_partitions, columns)
+    n_parts = source_partitions(src) if salt_partitions is None else salt_partitions
     return _collect_states(states, n_parts, fanin, direct_collect_limit)
-
-
-def sketch_agg_parquet(
-    spark,
-    path: str,
-    columns: list[str],
-    factory: Callable[[], object],
-    ingest: Callable[[object, pa.RecordBatch], None] = default_ingest,
-    fanin: int = 16,
-    direct_collect_limit: int = 64,
-    split_row_groups: bool = False,
-    filters: list[tuple] | None = None,
-):
-    """:func:`sketch_agg` over a parquet path via the columnar-direct ingest
-    (one partial per FILE, or per row-group with ``split_row_groups`` — the
-    giant-file remedy; see :func:`build_partials_parquet`). The split list
-    is computed ONCE (one listing, one footer pass) and both sizes the merge
-    strategy and feeds the task mapping; ``filters`` prune that list by
-    row-group statistics before it sizes anything."""
-    from ..sources.parquet_direct import parquet_splits
-
-    splits = parquet_splits(path, split_row_groups=split_row_groups, filters=filters)
-    states = build_partials_parquet(
-        spark, path, columns, factory, ingest, splits=splits, filters=filters
-    )
-    return _collect_states(states, len(splits), fanin, direct_collect_limit)
 
 
 def _collect_states(states: DataFrame, n_parts: int, fanin: int, direct_collect_limit: int):

@@ -590,32 +590,6 @@ def _doc_chunks(rb: pa.RecordBatch) -> Iterator[pa.RecordBatch]:
         yield rb.slice(lo, _KERNEL_DOC_CHUNK)
 
 
-def minhash_band_keys(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(doc_id, band, key): one row per band, key = hash of the band's rows."""
-    df = _spread(df)
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for whole in batches:
-            for rb in _doc_chunks(whole):
-                pdf = rb.to_pandas()
-                sig = _minhash_signatures(pdf[text_col])
-                n = len(pdf)
-                key = _band_keys_from_sig(sig)
-                ids = np.repeat(pdf[id_col].to_numpy(), N_BANDS)
-                band_idx = np.tile(np.arange(N_BANDS), n)
-                yield pa.RecordBatch.from_pydict(
-                    {
-                        "doc_id": pa.array(ids, pa.int64()),
-                        "band": pa.array(band_idx, pa.int32()),
-                        "key": pa.array(key.ravel().astype(np.int64), pa.int64()),
-                    }
-                )
-
-    return df.select(id_col, text_col).mapInArrow(fn, "doc_id long, band int, key long")
-
-
 def minhash_doc_features(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:

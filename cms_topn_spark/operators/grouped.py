@@ -1,8 +1,8 @@
 """Two-level per-group sketch aggregation for high-cardinality GROUP BY.
 
-``groupwise.groupwise_estimate`` shuffles whole groups to single tasks —
-right when groups are few, wrong when a group's rows dwarf an executor. This
-operator is the scale form, the same shape as the global build:
+Shuffling whole groups to single tasks is right when groups are few and
+wrong when a group's rows dwarf an executor. This operator is the scale
+form, the same shape as the global build:
 
   stage 1 (map-side, shuffle-free): each task partitions its Arrow batches by
       key with one C++ sort, folds every key-slice into that key's sketch,
@@ -15,6 +15,12 @@ operator is the scale form, the same shape as the global build:
 The shuffle therefore moves |groups-per-partition| · |state| bytes instead of
 the raw rows — the count-min analogue of a map-side combine. Skewed groups
 cost nothing extra: a hot key's rows stay where they are and fold locally.
+
+Every operator takes a DataFrame or a ``sources.parquet_direct.ParquetSource``
+(columnar-direct: each task reads its own parquet split with pyarrow and
+folds it, skipping Spark's columnar → row → Arrow pivot — measured ~8× the
+scan's own JVM CPU, with per-thread throughput ~2.6× lower at 8 task
+threads). Same fold, same states, same merge, same oracle either way.
 """
 
 from __future__ import annotations
@@ -25,10 +31,10 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from ..core.base import merge_serialized
+from ..sources.parquet_direct import ParquetSource, Source, map_source, source_types
 from .build import pack_arrow_array
 
 
@@ -83,13 +89,10 @@ def _state_fold(
     value_col: str,
     factory: Callable[[], object],
     ingest: Callable[[object, pa.Array], None],
-    drop_null_keys: bool = False,
 ) -> Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]:
-    """The stage-1 fold as a batches→batches kernel, shared by the
-    DataFrame path (``mapInArrow`` after a Spark scan) and the
-    columnar-direct path (``sources.parquet_direct`` — no JVM row pivot).
-    ``drop_null_keys`` performs the NULL-group drop inside the kernel for
-    the direct path, where no Catalyst filter ran upstream."""
+    """The stage-1 fold as a batches→batches kernel. Rows with a NULL group
+    key are dropped here, whatever the source (a DataFrame's Catalyst
+    filter has usually removed them already)."""
     # snapshot the caps into the closure (captured by value, so they ship to
     # the workers with the task instead of re-resolving module globals there)
     max_rows, max_bytes = _DICE_MAX_ROWS, _DICE_MAX_BYTES
@@ -135,7 +138,7 @@ def _state_fold(
         pend_rows = pend_bytes = 0
         for rb in batches:
             rb = rb.select(cols)  # order by NAME — file schema order varies
-            if drop_null_keys and rb.column(0).null_count:
+            if rb.column(0).null_count:
                 rb = rb.filter(pc.is_valid(rb.column(0)))
             pend.append(rb)
             pend_rows += rb.num_rows
@@ -242,7 +245,7 @@ def _merge_readout(
 
 
 def grouped_sketch_states(
-    df: DataFrame,
+    src: Source,
     group_col: str,
     value_col: str,
     factory: Callable[[], object],
@@ -255,103 +258,53 @@ def grouped_sketch_states(
     stage-1 state count by the task count (measured 1.5× SLOWER on the
     single-file test corpus than the serial fold it parallelizes) — and at
     real scale inputs already have ≥ cores splits, so spreading buys
-    nothing there either.
+    nothing there either. For the same reason a small ParquetSource is not
+    sharded: one task per split.
 
     NULL group keys are dropped up front (documented semantics, like
     aggregate functions skipping NULLs): letting them through would
     float64-coerce an int key column inside the Arrow kernel (NaN for the
     null), breaking the declared schema — and silently corrupting int keys
     above 2^53 in the same window."""
-    states, gtype = _partial_states(df, group_col, value_col, factory, ingest)
+    states, gtype = _partial_states(src, group_col, value_col, factory, ingest)
     return _merge_states(states, group_col, gtype)
 
 
 def _partial_states(
-    df: DataFrame,
+    src: Source,
     group_col: str,
     value_col: str,
     factory: Callable[[], object],
     ingest: Callable[[object, pa.Array], None] = _packed_slice_ingest,
+    min_splits: int | None = None,
 ) -> tuple[DataFrame, str]:
     """Stage 1 only: the shuffle-free per-(task, group) partial states (and
     the group type) — the input both the states API and the fused
-    merge-readouts consume."""
-    gtype = dict(df.dtypes)[group_col]
-    df = df.where(F.col(group_col).isNotNull())
-    partials = _state_fold(group_col, value_col, factory, ingest)
-    return (
-        df.select(group_col, value_col).mapInArrow(
-            partials, f"{group_col} {gtype}, state binary"
-        ),
-        gtype,
-    )
-
-
-def grouped_sketch_states_parquet(
-    spark,
-    path: str,
-    group_col: str,
-    value_col: str,
-    factory: Callable[[], object],
-    ingest: Callable[[object, pa.Array], None] = _packed_slice_ingest,
-    gtype: str | None = None,
-    split_row_groups: bool = False,
-    filters: list[tuple] | None = None,
-) -> DataFrame:
-    """:func:`grouped_sketch_states` over a parquet path via the
-    COLUMNAR-DIRECT ingest (sources/parquet_direct.py): each task reads its
-    own file split with pyarrow and folds it, skipping Spark's columnar →
-    row → Arrow double pivot — measured on this box the pivot costs ~8× the
-    scan itself in JVM CPU and its per-thread throughput drops ~2.6× at 8
-    task threads, which capped this operator's N→4N scaling at ~0.44 while
-    the fold itself scaled cleanly. Same states, same merge, same oracle.
-    ``filters`` are the direct source's pushdown layer (statistics-pruned
-    splits + columnar residual mask — see the source module)."""
-    states, gtype = _partial_states_parquet(
-        spark, path, group_col, value_col, factory, ingest, gtype,
-        split_row_groups, filters,
-    )
-    return _merge_states(states, group_col, gtype)
-
-
-def _partial_states_parquet(
-    spark,
-    path: str,
-    group_col: str,
-    value_col: str,
-    factory: Callable[[], object],
-    ingest: Callable[[object, pa.Array], None] = _packed_slice_ingest,
-    gtype: str | None = None,
-    split_row_groups: bool = False,
-    filters: list[tuple] | None = None,
-    min_splits: int | None = None,
-) -> tuple[DataFrame, str]:
-    """Stage 1 of the columnar-direct form (see
-    :func:`grouped_sketch_states_parquet` for the trade-offs).
+    merge-readouts consume.
 
     ``min_splits``: when set (the quantile/distinct/estimate forms pass the
-    core count), a small input (one single-row-group file — the gate
+    core count), a small ParquetSource (one single-row-group file — the gate
     tables' shape) is row-range-sharded so the fold runs at scan
     parallelism instead of one task per file (parquet_direct.shard_splits).
     Only callers whose merged result is partition-layout-independent may
     set it (KLL/HLL/t-digest merges; bitwise so in the exact regimes the
     gates run in) — CMS top-n retained sets break boundary ties by merge
-    order, so the top-n forms leave it unset. At real scale the split list
-    is already ≥ cores and sharding is a no-op."""
-    from ..sources.parquet_direct import map_parquet_batches, spark_type_of
-
-    if gtype is None:
-        gtype = spark_type_of(path, group_col)
-    partials = _state_fold(group_col, value_col, factory, ingest, drop_null_keys=True)
+    order, so the top-n and states forms leave it unset. At real scale the
+    split list is already ≥ cores and sharding is a no-op; a DataFrame
+    keeps its own partitioning."""
+    gtype = source_types(src, [group_col])[group_col]
     return (
-        map_parquet_batches(
-            spark, path, [group_col, value_col], partials,
+        map_source(
+            src, [group_col, value_col], _state_fold(group_col, value_col, factory, ingest),
             f"{group_col} {gtype}, state binary",
-            split_row_groups=split_row_groups, filters=filters,
-            min_splits=min_splits,
+            min_splits=min_splits, not_null=group_col,
         ),
         gtype,
     )
+
+
+def _parallelism() -> int:
+    return SparkSession.active().sparkContext.defaultParallelism
 
 
 def grouped_probe(
@@ -389,7 +342,7 @@ def grouped_probe(
 
 
 def grouped_topn(
-    df: DataFrame, group_col: str, value_col: str, n: int, e: float = 0.001, p: float = 0.99
+    src: Source, group_col: str, value_col: str, n: int, e: float = 0.001, p: float = 0.99
 ) -> DataFrame:
     """Per-group heavy hitters: (group, item, frequency), freq desc per group.
 
@@ -398,10 +351,11 @@ def grouped_topn(
     column's Spark type (int family → long, float family → double, string /
     binary kept), so no driver action is needed. Only types the item
     encoding itself cannot represent (encoding.py raises for composites)
-    are outside this table; nothing silently degrades to ``str(item)``."""
+    are outside this table; nothing silently degrades to ``str(item)``.
+    A small ParquetSource is not sharded (see :func:`_partial_states`)."""
     from ..core.cms_topn import CmsTopn
 
-    vtype = dict(df.dtypes)[value_col]
+    vtype = source_types(src, [value_col])[value_col]
     item_type = _ITEM_TYPES.get(vtype)
     if item_type is None:
         raise TypeError(
@@ -410,7 +364,7 @@ def grouped_topn(
         )
 
     partials, gtype = _partial_states(
-        df, group_col, value_col, lambda: CmsTopn(n, e, p, update="linear")
+        src, group_col, value_col, lambda: CmsTopn(n, e, p, update="linear")
     )
     return _merge_readout(
         partials, group_col, gtype, _topn_cols, f"item {item_type}, frequency long"
@@ -428,48 +382,8 @@ def _topn_cols(sk) -> dict:
     }
 
 
-def grouped_topn_parquet(
-    spark,
-    path: str,
-    group_col: str,
-    value_col: str,
-    n: int,
-    e: float = 0.001,
-    p: float = 0.99,
-    split_row_groups: bool = False,
-    filters: list[tuple] | None = None,
-) -> DataFrame:
-    """:func:`grouped_topn` over a parquet path via the columnar-direct
-    ingest — identical semantics (same fold, same states-only exchange,
-    same readout; parity-tested per group against the DataFrame form), with
-    the scan feeding the Python kernel columnar-to-columnar instead of
-    through Spark's row pivot (see :func:`grouped_sketch_states_parquet`
-    for the measurements and when NOT to prefer this path). The item type
-    comes from the parquet footer the same way the DataFrame form reads it
-    from the Spark schema; ``filters`` are the source's pushdown layer."""
-    from ..core.cms_topn import CmsTopn
-    from ..sources.parquet_direct import spark_types_of
-
-    types = spark_types_of(path, [group_col, value_col])
-    gtype, vtype = types[group_col], types[value_col]
-    item_type = _ITEM_TYPES.get(vtype)
-    if item_type is None:
-        raise TypeError(
-            f"grouped_topn value column type {vtype!r} has no sketch item "
-            f"encoding (supported: {sorted(_ITEM_TYPES)})"
-        )
-    partials, gtype = _partial_states_parquet(
-        spark, path, group_col, value_col,
-        lambda: CmsTopn(n, e, p, update="linear"), gtype=gtype,
-        split_row_groups=split_row_groups, filters=filters,
-    )
-    return _merge_readout(
-        partials, group_col, gtype, _topn_cols, f"item {item_type}, frequency long"
-    )
-
-
 def grouped_quantiles(
-    df: DataFrame,
+    src: Source,
     group_col: str,
     value_col: str,
     qs: tuple = (0.25, 0.5, 0.75),
@@ -481,8 +395,7 @@ def grouped_quantiles(
     per-(task, group) KLL states shuffle-free, stage 2 shuffles and merges
     STATES (k float64s per group, not the group's rows), stage 3 reads the
     quantiles out of each merged state distributed (mapInPandas — no state
-    ever reaches the driver). Contrast ``groupwise.groupwise_estimate``,
-    which ships whole groups to single tasks and only suits few-group cases.
+    ever reaches the driver).
 
     In the exact regime (per-group n below the compaction threshold for
     ``k``) each quantile equals DuckDB/PostgreSQL ``quantile_cont`` bitwise;
@@ -492,7 +405,8 @@ def grouped_quantiles(
     if len(qs) != len(q_names):
         raise ValueError("qs and q_names must have the same length")
     partials, gtype = _partial_states(
-        df, group_col, value_col, lambda: KllSketch(k), ingest=numeric_slice_ingest
+        src, group_col, value_col, lambda: KllSketch(k),
+        ingest=numeric_slice_ingest, min_splits=_parallelism(),
     )
     return _merge_readout(
         partials, group_col, gtype, _quantile_cols(qs, q_names),
@@ -508,45 +422,15 @@ def _quantile_cols(qs: tuple, q_names: tuple) -> Callable[[object], dict]:
     return readout
 
 
-def grouped_quantiles_parquet(
-    spark,
-    path: str,
-    group_col: str,
-    value_col: str,
-    qs: tuple = (0.25, 0.5, 0.75),
-    q_names: tuple = ("q25", "q50", "q75"),
-    k: int = 200,
-    split_row_groups: bool = False,
-    filters: list[tuple] | None = None,
-) -> DataFrame:
-    """:func:`grouped_quantiles` over a parquet path via the columnar-direct
-    ingest — identical semantics and oracle (same fold, same states-only
-    exchange, same distributed readout); the scan feeds the Python kernel
-    columnar-to-columnar instead of through Spark's row pivot, which is
-    this operator's dominant cost and scaling cap on wide parallelism (see
-    :func:`grouped_sketch_states_parquet` for the measurements).
-    ``split_row_groups`` is the giant-file remedy (one task per row group);
-    ``filters`` push (column, op, literal) conjuncts into the scan —
-    statistics-pruned splits plus a columnar residual mask, the direct
-    source's answer to Catalyst pushdown."""
-    from ..core.kll import KllSketch
-
-    if len(qs) != len(q_names):
-        raise ValueError("qs and q_names must have the same length")
-    partials, gtype = _partial_states_parquet(
-        spark, path, group_col, value_col, lambda: KllSketch(k),
-        ingest=numeric_slice_ingest, split_row_groups=split_row_groups,
-        filters=filters,
-        min_splits=spark.sparkContext.defaultParallelism,
-    )
-    return _merge_readout(
-        partials, group_col, gtype, _quantile_cols(qs, q_names),
-        ", ".join(f"{n} double" for n in q_names),
-    )
+# bench.py's query-scaling section calls this name, whose harness is kept
+# unchanged across rounds; it is grouped_quantiles over a ParquetSource and
+# nothing more (``spark`` is unused: the active session runs it).
+def grouped_quantiles_parquet(spark, path, group_col, value_col, **kw) -> DataFrame:
+    return grouped_quantiles(ParquetSource(path), group_col, value_col, **kw)
 
 
 def grouped_estimate(
-    df: DataFrame,
+    src: Source,
     group_col: str,
     value_col: str,
     factory: Callable[[], object],
@@ -555,13 +439,12 @@ def grouped_estimate(
     out_type: str,
     ingest: Callable[[object, pa.Array], None] = auto_slice_ingest,
 ) -> DataFrame:
-    """Two-level scale form of ``groupwise.groupwise_estimate``: one row
-    (group, estimate) per group for ANY mergeable sketch, built through the
-    same per-(task, group) partial-state fold + states-only exchange + fused
-    merge-readout as the typed grouped forms. ``groupwise_estimate`` shuffles
-    each group's RAW ROWS to one task — with few groups that is both a full
-    row exchange and a parallelism cap equal to the group count; here stage 1
-    folds shuffle-free at scan parallelism and only sketch states move.
+    """One row (group, estimate) per group for ANY mergeable sketch, built
+    through the same per-(task, group) partial-state fold + states-only
+    exchange + fused merge-readout as the typed grouped forms. Shuffling
+    each group's RAW ROWS to one task would be both a full row exchange and
+    a parallelism cap equal to the group count; here stage 1 folds
+    shuffle-free at scan parallelism and only sketch states move.
 
     The default ingest dispatches on the sketch's protocol (packed items vs
     float64 batches); pass one explicitly to pin it. The estimate equals the
@@ -569,37 +452,8 @@ def grouped_estimate(
     (HLL set/register union, KLL in the exact regime, t-digest with
     ``delta ≥ πN`` — singleton centroids survive any merge order), which is
     exactly the regime the correctness gates run in."""
-    partials, gtype = _partial_states(df, group_col, value_col, factory, ingest)
-    return _merge_readout(
-        partials, group_col, gtype,
-        lambda sk: {out_field: [estimator(sk)]}, f"{out_field} {out_type}",
-    )
-
-
-def grouped_estimate_parquet(
-    spark,
-    path: str,
-    group_col: str,
-    value_col: str,
-    factory: Callable[[], object],
-    estimator: Callable[[object], object],
-    out_field: str,
-    out_type: str,
-    ingest: Callable[[object, pa.Array], None] = auto_slice_ingest,
-    gtype: str | None = None,
-    split_row_groups: bool = False,
-    filters: list[tuple] | None = None,
-) -> DataFrame:
-    """:func:`grouped_estimate` over a parquet path via the columnar-direct
-    ingest — same fold, same states-only exchange, same fused readout; see
-    :func:`grouped_sketch_states_parquet` for the row-pivot measurements and
-    when the JVM scan is still the right choice. ``filters`` are the direct
-    source's pushdown layer; ``gtype`` overrides the footer-derived group
-    Spark type, as on the states API."""
-    partials, gtype = _partial_states_parquet(
-        spark, path, group_col, value_col, factory, ingest, gtype=gtype,
-        split_row_groups=split_row_groups, filters=filters,
-        min_splits=spark.sparkContext.defaultParallelism,
+    partials, gtype = _partial_states(
+        src, group_col, value_col, factory, ingest, min_splits=_parallelism()
     )
     return _merge_readout(
         partials, group_col, gtype,
@@ -608,7 +462,7 @@ def grouped_estimate_parquet(
 
 
 def grouped_distinct(
-    df: DataFrame,
+    src: Source,
     group_col: str,
     value_col: str,
     p: int = 14,
@@ -624,35 +478,8 @@ def grouped_distinct(
     from ..core.hll import HyperLogLog
 
     return grouped_estimate(
-        df, group_col, value_col,
+        src, group_col, value_col,
         lambda: HyperLogLog(p=p, sparse_limit=sparse_limit),
         lambda sk: int(sk.estimate()), out_col, "long",
         ingest=_packed_slice_ingest,
-    )
-
-
-def grouped_distinct_parquet(
-    spark,
-    path: str,
-    group_col: str,
-    value_col: str,
-    p: int = 14,
-    sparse_limit: int | None = 1 << 22,
-    out_col: str = "distinct_values",
-    split_row_groups: bool = False,
-    filters: list[tuple] | None = None,
-) -> DataFrame:
-    """:func:`grouped_distinct` over a parquet path via the columnar-direct
-    ingest — identical semantics; see :func:`grouped_sketch_states_parquet`
-    for the row-pivot measurements this path avoids and the cases where the
-    JVM scan is still the right choice. ``filters`` are the source's
-    pushdown layer."""
-    from ..core.hll import HyperLogLog
-
-    return grouped_estimate_parquet(
-        spark, path, group_col, value_col,
-        lambda: HyperLogLog(p=p, sparse_limit=sparse_limit),
-        lambda sk: int(sk.estimate()), out_col, "long",
-        ingest=_packed_slice_ingest,
-        split_row_groups=split_row_groups, filters=filters,
     )

@@ -568,11 +568,6 @@ def probe_masks(n_planes: int, probe_hamming: int) -> list[int]:
     """All XOR masks within Hamming distance ``probe_hamming`` of a bucket
     key — the multi-probe neighborhood. probe_hamming >= n_planes enumerates
     the ENTIRE key space (the full-probe exactness regime)."""
-    if n_planes > 12 and probe_hamming >= n_planes:
-        raise ValueError(
-            "full-probe enumeration of 2^n_planes masks is only sensible for "
-            "small n_planes (the explicit oracle regime); use n_planes <= 12"
-        )
     return [m for m in range(1 << n_planes) if bin(m).count("1") <= probe_hamming]
 
 
@@ -605,7 +600,10 @@ def lsh_topk(
     CONSTRUCTION (the same explicitly-labeled exactness regime as IVF's
     n_probe = n_cells). Since round 8 that regime enumerates its candidate
     set directly instead of materializing the equivalent (and n_tables-
-    redundant) bucket join — see :func:`_lsh_candidates_full_probe`; the
+    redundant) bucket join — see :func:`_lsh_candidates_full_probe`. Full
+    probe (``probe_hamming >= n_planes``) at ANY ``n_planes`` takes that
+    path, so it runs queries × corpus directly and never enumerates the
+    2^n_planes probe masks; the
     bucket-join machinery itself is the sublinear path, exercised by the
     planted-cluster recall gate and the candidate-parity pytest. The
     exactness baseline is brute_force_topk (same schema).

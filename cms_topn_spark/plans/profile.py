@@ -25,6 +25,7 @@ from ..core import encoding as enc
 from ..core.composite import CompositeSketch
 from ..core.kll import KllSketch
 from ..operators.build import sketch_agg
+from ..sources.parquet_direct import Source
 
 
 def profile_factory(n_tokens: int = 5, eps: float = 0.00002, hll_p: int = 14, kll_k: int = 1 << 18):
@@ -76,8 +77,11 @@ def profile_ingest(sk: CompositeSketch, batch: pa.RecordBatch) -> None:
     sk["token_topn"].add_packed(data, offs, lens, counts=counts, type_tag=enc.TYPE_STRING)
 
 
-def corpus_profile(docs, text_col: str = "text", n_tokens: int = 5) -> dict:
-    """One-scan profile → dict of scalars (all exact at gate widths).
+def corpus_profile(src: Source, text_col: str = "text", n_tokens: int = 5) -> dict:
+    """One-scan profile → dict of scalars (all exact at gate widths), over a
+    DataFrame or a ``ParquetSource`` (one partial composite state per file,
+    or per row group, pyarrow-pruned to the text column, no JVM row pivot —
+    gated as ``corpus_profile_direct``).
 
     Empty / all-NULL corpora return the well-defined empty profile instead
     of crashing (sketch_agg yields None there). A tie at the maximum token
@@ -89,31 +93,9 @@ def corpus_profile(docs, text_col: str = "text", n_tokens: int = 5) -> dict:
     tokens survive the heap is itself merge-order dependent, so
     ``top_token`` is deterministic only while max-frequency ties fit within
     ``n_tokens``. Corpora that may tie wider should raise ``n_tokens``
-    above the expected tie width (both entry points take it)."""
+    above the expected tie width."""
     sk = sketch_agg(
-        docs.select(text_col), profile_factory(n_tokens=n_tokens), profile_ingest
-    )
-    return _profile_readout(sk)
-
-
-def corpus_profile_parquet(
-    spark,
-    path: str,
-    text_col: str = "text",
-    split_row_groups: bool = False,
-    n_tokens: int = 5,
-) -> dict:
-    """:func:`corpus_profile` over a parquet path via the columnar-direct
-    ingest (operators/build.py sketch_agg_parquet): one partial composite
-    state per file (or per row group — the giant-file remedy), pyarrow-pruned
-    to the text column, no JVM row pivot — the global-build analogue of
-    grouped_quantiles_parquet, with the same readout and the same oracle
-    (gated as ``corpus_profile_direct``)."""
-    from ..operators.build import sketch_agg_parquet
-
-    sk = sketch_agg_parquet(
-        spark, path, [text_col], profile_factory(n_tokens=n_tokens),
-        profile_ingest, split_row_groups=split_row_groups,
+        src, profile_factory(n_tokens=n_tokens), profile_ingest, columns=[text_col]
     )
     return _profile_readout(sk)
 

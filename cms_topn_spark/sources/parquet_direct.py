@@ -19,11 +19,19 @@ read its own split columnar-to-columnar with pyarrow:
 
     files-DataFrame (one row per file) → mapInArrow(read + fold)
 
-Column pruning happens via ``columns`` (pyarrow reads only those column
-chunks); each file is one task, so the scan parallelism is the file count —
-the same unit a 100-TB Iceberg table's manifest hands out. Predicate
-pushdown happens via ``filters`` — (column, op, literal) conjuncts applied
-in two layers like a lakehouse scan: the driver prunes splits whose
+The way in is :class:`ParquetSource`: every sketch operator that takes a
+DataFrame (``build_partials``, ``sketch_agg``, the ``grouped_*`` forms,
+``corpus_profile``) takes a ``ParquetSource(path, filters,
+split_row_groups)`` in its place and runs the same fold over it. The
+helpers below (:func:`source_types`, :func:`map_source`,
+:func:`source_partitions`) are the only code that tells the two kinds
+apart.
+
+Column pruning happens via the operator's columns (pyarrow reads only
+those column chunks); each file is one task, so the scan parallelism is the
+file count — the same unit a 100-TB Iceberg table's manifest hands out.
+Predicate pushdown happens via ``filters`` — (column, op, literal)
+conjuncts applied in two layers like a lakehouse scan: the driver prunes splits whose
 row-group statistics prove no match (pruned splits are never scheduled),
 and tasks apply the residual mask columnar-side with Arrow compute.
 Trade-offs, stated plainly: this bypasses Catalyst's scan node, so only
@@ -45,10 +53,89 @@ columns feeding cheap folds (grouped quantiles 15.6 s → 9.1 s there).
 from __future__ import annotations
 
 import os
+from dataclasses import dataclass
+from functools import cached_property
 from typing import Callable, Iterator
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+
+@dataclass(frozen=True)
+class ParquetSource:
+    """A parquet file or directory read columnar-direct by the operator's
+    own tasks — the alternative to passing ``spark.read.parquet(path)``.
+
+    ``filters``: conjunctive (column, op, literal) predicates pushed into
+    the scan (see :func:`map_parquet_batches`). ``split_row_groups``: one
+    task per (file, row group) instead of per file — the giant-file remedy.
+
+    The split list is read once per source object, on first use, and reused
+    by every job over it — a snapshot, like a DataFrame's file index; make a
+    new source after rewriting the path."""
+
+    path: str
+    filters: list[tuple] | None = None
+    split_row_groups: bool = False
+
+    @cached_property
+    def splits(self) -> list[tuple[str, int]]:
+        return parquet_splits(
+            self.path, split_row_groups=self.split_row_groups, filters=self.filters
+        )
+
+
+Source = DataFrame | ParquetSource
+
+
+def source_types(src: Source, columns: list[str]) -> dict[str, str]:
+    """Spark SQL type strings of ``columns``: the DataFrame's own dtypes, or
+    the parquet footer's types mapped to Spark's."""
+    if isinstance(src, ParquetSource):
+        import pyarrow.parquet as pq
+
+        schema = pq.read_schema(src.splits[0][0])
+        return {c: _spark_type(schema.field(c).type, c) for c in columns}
+    types = dict(src.dtypes)
+    return {c: types[c] for c in columns}
+
+
+def map_source(
+    src: Source,
+    columns: list[str] | None,
+    fold: Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]],
+    out_schema: str,
+    min_splits: int | None = None,
+    not_null: str | None = None,
+) -> DataFrame:
+    """Run ``fold`` (a ``mapInArrow`` function) over ``columns`` of ``src``.
+
+    A DataFrame goes through ``select(columns).mapInArrow`` (``columns=None``
+    keeps it as projected); a :class:`ParquetSource` through
+    :func:`map_parquet_batches` in the active Spark session, fanned out to
+    ``min_splits`` tasks when its split list is shorter (a DataFrame keeps
+    its own partitioning). ``not_null`` adds a Catalyst ``isNotNull`` filter
+    on a DataFrame, which reaches its scan; a ParquetSource has no Catalyst
+    layer, so a fold given ``not_null`` must drop those rows itself."""
+    if isinstance(src, ParquetSource):
+        return map_parquet_batches(src, columns, fold, out_schema, min_splits)
+    if not_null is not None:
+        src = src.where(F.col(not_null).isNotNull())
+    if columns is not None:
+        src = src.select(*columns)
+    return src.mapInArrow(fold, out_schema)
+
+
+def source_partitions(src: Source) -> int:
+    """Task count of a fold over ``src`` before any sharding: the
+    DataFrame's partition count, or the length of the source's split list
+    (the same list :func:`map_source` hands to the tasks)."""
+    if isinstance(src, ParquetSource):
+        return len(src.splits)
+    from ..operators.build import plan_num_partitions
+
+    return plan_num_partitions(src)
 
 
 def parquet_files(path: str) -> list[str]:
@@ -70,24 +157,6 @@ def parquet_files(path: str) -> list[str]:
             if f.endswith(".parquet") and not f.startswith(("_", "."))
         )
     return sorted(out)
-
-
-def spark_type_of(path: str, column: str) -> str:
-    """Spark SQL type string of a parquet column (one listing + one footer
-    read; callers needing several columns use :func:`spark_types_of`)."""
-    return spark_types_of(path, [column])[column]
-
-
-def spark_types_of(path: str, columns: list[str]) -> dict[str, str]:
-    """Spark SQL type strings for several parquet columns from ONE listing
-    and ONE footer read."""
-    import pyarrow.parquet as pq
-
-    files = parquet_files(path)
-    if not files:
-        raise FileNotFoundError(f"no parquet files under {path!r}")
-    schema = pq.read_schema(files[0])
-    return {c: _spark_type(schema.field(c).type, c) for c in columns}
 
 
 def _spark_type(t: pa.DataType, column: str) -> str:
@@ -238,54 +307,41 @@ def shard_splits(
 
 
 def map_parquet_batches(
-    spark: SparkSession,
-    path: str,
+    src: ParquetSource,
     columns: list[str],
     fold: Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]],
     out_schema: str,
-    files: list[str] | None = None,
-    split_row_groups: bool = False,
-    splits: list[tuple[str, int]] | None = None,
-    filters: list[tuple] | None = None,
     min_splits: int | None = None,
 ) -> DataFrame:
     """Run ``fold`` (a batches→batches kernel, same contract as a
-    ``mapInArrow`` function) over ``columns`` of the parquet data at
-    ``path``, one task per file, reading columnar-direct in the worker.
+    ``mapInArrow`` function) over ``columns`` of ``src``, one task per
+    split of ``src.splits``, reading columnar-direct in the worker.
 
     ``use_threads=False`` on the pyarrow reader: each task is already one
     core's worth of work — per-task thread pools would oversubscribe the
     executor and wreck the task-count = parallelism accounting.
 
-    ``files``: pre-resolved file list — callers that already listed the
-    directory (e.g. to size the merge strategy) pass it to avoid a second
-    listing and the TOCTOU window between two listings.
+    ``src.split_row_groups`` hands out one task per (file, row-group)
+    instead of per file — the remedy when a few giant files would
+    otherwise serialize the scan (a parquet row group is the file's
+    independently-readable unit, exactly what Spark's own scan splits on).
+    Costs one footer read per file on the driver; a real lakehouse hands
+    out the same splits from the table manifest without touching footers.
 
-    ``split_row_groups``: one task per (file, row-group) instead of per
-    file — the remedy when a few giant files would otherwise serialize the
-    scan (a parquet row group is the file's independently-readable unit,
-    exactly what Spark's own scan splits on). Costs one footer read per
-    file on the driver; a real lakehouse hands out the same splits from
-    the table manifest without touching footers.
-
-    ``filters``: conjunctive (column, op, literal) predicates, pushed down
-    in two layers exactly like a lakehouse scan: the DRIVER prunes splits
-    whose row-group statistics prove no row can match (the manifest-pruning
-    analogue — pruned splits are never scheduled, their column chunks never
-    read), and each TASK applies the residual predicate columnar-side with
-    Arrow compute before the fold sees a batch. Filter-only columns are
-    read for the mask and dropped before the fold, so the fold's contract
-    (exactly ``columns``) is unchanged. NULL semantics are SQL WHERE's:
-    NULLs never pass."""
-    if filters:
-        _check_filters(filters)
-    if splits is None:
-        splits = parquet_splits(
-            path, files=files, split_row_groups=split_row_groups, filters=filters
-        )
+    ``src.filters``: conjunctive (column, op, literal) predicates, pushed
+    down in two layers exactly like a lakehouse scan: the DRIVER prunes
+    splits whose row-group statistics prove no row can match (the
+    manifest-pruning analogue — pruned splits are never scheduled, their
+    column chunks never read), and each TASK applies the residual predicate
+    columnar-side with Arrow compute before the fold sees a batch.
+    Filter-only columns are read for the mask and dropped before the fold,
+    so the fold's contract (exactly ``columns``) is unchanged. NULL
+    semantics are SQL WHERE's: NULLs never pass."""
+    filters = src.filters
+    spark = SparkSession.active()
     # ``min_splits`` (see shard_splits): fan small split lists out by row
     # ranges so the fold's parallelism isn't capped by the file count
-    sharded = shard_splits(splits, min_splits or 0)
+    sharded = shard_splits(src.splits, min_splits or 0)
     # exactly one split per partition: parallelize's deterministic list
     # slicing, NOT .repartition(n) — round-robin starts at a random offset
     # per input partition, so splits can collide into one task and leave
@@ -370,14 +426,14 @@ def map_parquet_batches(
 
 def parquet_splits(
     path: str,
-    files: list[str] | None = None,
     split_row_groups: bool = False,
     filters: list[tuple] | None = None,
 ) -> list[tuple[str, int]]:
     """The (file, row_group) task list — row_group = -1 means whole file.
-    Computed ONCE per job: callers sizing a merge strategy pass the same
-    list to :func:`map_parquet_batches`, so the footers are read a single
-    time and the strategy can never disagree with the task count.
+    Computed ONCE per :class:`ParquetSource`: the merge-strategy sizing
+    (:func:`source_partitions`) and the task mapping read the same list, so
+    the footers are read a single time and the strategy can never disagree
+    with the task count.
 
     With ``filters``, splits whose row-group statistics prove no match are
     dropped here — the manifest-pruning layer: a pruned split is never
@@ -387,8 +443,7 @@ def parquet_splits(
     anyway and reads only those. Stats-free columns/footers conservatively
     keep their splits; correctness never depends on pruning, only on the
     residual mask."""
-    if files is None:
-        files = parquet_files(path)
+    files = parquet_files(path)
     if not files:
         raise FileNotFoundError(f"no parquet files under {path!r}")
     if filters:

@@ -22,3 +22,14 @@ def sf001_dir():
 @pytest.fixture(scope="session")
 def sf01_dir():
     return os.path.join(TESTDATA, "sf0.01")
+
+
+@pytest.fixture(params=["dataframe", "parquet_source"])
+def as_source(request, spark):
+    """Runs a test once per operator input kind: ``as_source(path)`` is
+    ``spark.read.parquet(path)`` or ``ParquetSource(path)``."""
+    if request.param == "dataframe":
+        return spark.read.parquet
+    from cms_topn_spark.sources.parquet_direct import ParquetSource
+
+    return ParquetSource

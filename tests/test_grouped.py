@@ -321,126 +321,122 @@ def test_invalidate_num_partitions_cache(spark):
     assert not _NPARTS_CACHE
 
 
-def test_grouped_quantiles_parquet_direct_matches_dataframe_form(spark, sf001_dir):
-    """The columnar-direct ingest (no JVM row pivot) produces bitwise the
-    same per-group quantiles as the DataFrame form, and drops NULL group
-    keys / all-NULL value groups with the same semantics."""
-    import tempfile
+def _duck_events(sf001_dir):
+    import duckdb
 
-    from cms_topn_spark.operators.grouped import (
-        grouped_quantiles,
-        grouped_quantiles_parquet,
-    )
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{sf001_dir}/events.parquet'")
+    return con
 
-    path = os.path.join(sf001_dir, "events.parquet")
-    a = sorted(
-        tuple(r)
+
+def test_grouped_quantiles_over_source(spark, sf001_dir, as_source, tmp_path):
+    """Either input kind gives per-group quantiles bitwise equal to DuckDB
+    quantile_cont (exact regime), and drops NULL group keys / all-NULL
+    value groups."""
+    from cms_topn_spark.operators.grouped import grouped_quantiles
+
+    got = {
+        r["user_id"]: (r["q25"], r["q50"], r["q75"])
         for r in grouped_quantiles(
-            spark.read.parquet(path), "user_id", "value", k=4096
+            as_source(os.path.join(sf001_dir, "events.parquet")), "user_id", "value", k=4096
         ).collect()
-    )
-    b = sorted(
-        tuple(r)
-        for r in grouped_quantiles_parquet(spark, path, "user_id", "value", k=4096).collect()
-    )
-    assert a == b and len(a) > 0
+    }
+    want = {
+        r[0]: (r[1], r[2], r[3])
+        for r in _duck_events(sf001_dir).execute(
+            "SELECT user_id, quantile_cont(value,0.25), quantile_cont(value,0.5),"
+            " quantile_cont(value,0.75) FROM events GROUP BY user_id"
+        ).fetchall()
+    }
+    assert got == want and len(got) > 0
 
-    tmp = tempfile.mkdtemp()
-    p2 = os.path.join(tmp, "t.parquet")
+    p2 = str(tmp_path / "t.parquet")
     spark.createDataFrame(
         [(1, 1.0), (None, 2.0), (1, 3.0), (2, None)], "g int, v double"
     ).coalesce(1).write.mode("overwrite").parquet(p2)
     got = sorted(
         tuple(r)
-        for r in grouped_quantiles_parquet(
-            spark, p2, "g", "v", qs=(0.5,), q_names=("q50",)
+        for r in grouped_quantiles(
+            as_source(p2), "g", "v", qs=(0.5,), q_names=("q50",)
         ).collect()
     )
     assert got == [(1, 2.0)]
 
 
-def test_grouped_topn_parquet_direct_state_parity(spark, sf001_dir):
-    """The columnar-direct per-group CMS build merges to the same canonical
-    per-group STATE as the DataFrame form: identical counter matrices,
-    identical totals, identical (item, frequency) top-n sets. Canonical
-    readout rather than raw serialized bytes on purpose — the frame carries
-    insertion-sequence tie-breakers that legitimately differ when the two
-    paths split the input into different task orders (same rule as
-    test_sketch_agg_parquet_matches_dataframe_form)."""
-    import numpy as np
+def test_grouped_topn_and_states_over_source(spark, sf001_dir, as_source):
+    """Either input kind merges each group's CMS to the counters of one
+    driver-side sketch over that group's rows, with exact totals; the
+    top-n (states and readout) holds exact counts of the group's top-5.
+    Canonical readout rather than raw serialized bytes on purpose — the
+    frame carries insertion-sequence tie-breakers that legitimately differ
+    with the task split."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
 
-    from cms_topn_spark.core import CmsTopn, sketch_from_bytes
-    from cms_topn_spark.operators.grouped import (
-        grouped_sketch_states,
-        grouped_sketch_states_parquet,
-        grouped_topn,
-        grouped_topn_parquet,
-    )
+    from cms_topn_spark.operators.build import pack_arrow_array
+    from cms_topn_spark.operators.grouped import grouped_sketch_states
 
     path = os.path.join(sf001_dir, "events.parquet")
     factory = lambda: CmsTopn(5, 0.0001, 0.99, update="linear")
-    a = {
+    tbl = pq.read_table(path, columns=["event_type", "user_id"])
+    counts = tbl.to_pandas().dropna().groupby(["event_type", "user_id"]).size()
+
+    def check_top5(g, top):
+        exact = counts[g]
+        assert all(exact[item] == f for item, f in top)
+        assert sorted(f for _, f in top) == sorted(exact.nlargest(5))
+
+    states = {
         r["event_type"]: sketch_from_bytes(bytes(r["state"]))
         for r in grouped_sketch_states(
-            spark.read.parquet(path), "event_type", "user_id", factory
+            as_source(path), "event_type", "user_id", factory
         ).collect()
     }
-    b = {
-        r["event_type"]: sketch_from_bytes(bytes(r["state"]))
-        for r in grouped_sketch_states_parquet(
-            spark, path, "event_type", "user_id", factory
-        ).collect()
-    }
-    assert set(a) == set(b) and len(a) > 0
-    for g in a:
-        assert np.array_equal(a[g].counters, b[g].counters)
-        assert a[g].total == b[g].total
-        assert dict(a[g].topn_list()) == dict(b[g].topn_list())
+    assert set(states) == set(counts.index.get_level_values(0))
+    for g, sk in states.items():
+        ref = factory()
+        data, offs, lens, tag = pack_arrow_array(
+            tbl.filter(pc.equal(tbl["event_type"], g))["user_id"]
+        )
+        ref.add_packed(data, offs, lens, type_tag=tag)
+        assert np.array_equal(sk.counters, ref.counters)
+        assert sk.total == ref.total == counts[g].sum()
+        check_top5(g, sk.topn_list())
 
-    # readout parity too: same (group, item, frequency) rows either way
-    ra = sorted(
-        tuple(r)
-        for r in grouped_topn(
-            spark.read.parquet(path), "event_type", "user_id", 5, e=0.0001
-        ).collect()
-    )
-    rb = sorted(
-        tuple(r)
-        for r in grouped_topn_parquet(
-            spark, path, "event_type", "user_id", 5, e=0.0001
-        ).collect()
-    )
-    assert ra == rb and len(ra) > 0
+    rows = grouped_topn(as_source(path), "event_type", "user_id", 5, e=0.0001).collect()
+    by_group = {}
+    for r in rows:
+        by_group.setdefault(r["event_type"], []).append((r["item"], r["frequency"]))
+    assert set(by_group) == set(states)
+    for g, top in by_group.items():
+        check_top5(g, top)
 
 
-def test_grouped_distinct_parquet_direct_matches_dataframe_form(spark, sf001_dir):
-    """Direct-ingest per-group HLL distinct counts equal the DataFrame form
-    row-for-row (sparse-exact regime at sf0.001, so both equal the truth)."""
-    from cms_topn_spark.operators.grouped import (
-        grouped_distinct,
-        grouped_distinct_parquet,
-    )
+def test_grouped_distinct_over_source(sf001_dir, as_source):
+    """Either input kind gives per-group HLL distinct counts equal to
+    COUNT(DISTINCT) (sparse-exact regime at sf0.001)."""
+    from cms_topn_spark.operators.grouped import grouped_distinct
 
-    path = os.path.join(sf001_dir, "events.parquet")
-    a = sorted(
-        tuple(r)
+    got = {
+        r["event_type"]: r["distinct_values"]
         for r in grouped_distinct(
-            spark.read.parquet(path), "event_type", "user_id"
+            as_source(os.path.join(sf001_dir, "events.parquet")), "event_type", "user_id"
         ).collect()
+    }
+    want = dict(
+        _duck_events(sf001_dir).execute(
+            "SELECT event_type, count(DISTINCT user_id) FROM events"
+            " WHERE event_type IS NOT NULL GROUP BY event_type"
+        ).fetchall()
     )
-    b = sorted(
-        tuple(r)
-        for r in grouped_distinct_parquet(
-            spark, path, "event_type", "user_id"
-        ).collect()
-    )
-    assert a == b and len(a) > 0
+    assert got == want and len(got) > 0
 
 
 def test_parquet_direct_column_order_independent(spark, tmp_path):
     """The fold selects columns by NAME — a file whose schema stores the
     value column before the group column must still fold correctly."""
-    from cms_topn_spark.operators.grouped import grouped_quantiles_parquet
+    from cms_topn_spark.operators.grouped import grouped_quantiles
+    from cms_topn_spark.sources.parquet_direct import ParquetSource
 
     p = str(tmp_path / "rev.parquet")
     spark.createDataFrame(
@@ -448,8 +444,8 @@ def test_parquet_direct_column_order_independent(spark, tmp_path):
     ).coalesce(1).write.mode("overwrite").parquet(p)
     got = sorted(
         tuple(r)
-        for r in grouped_quantiles_parquet(
-            spark, p, "g", "v", qs=(0.5,), q_names=("q50",)
+        for r in grouped_quantiles(
+            ParquetSource(p), "g", "v", qs=(0.5,), q_names=("q50",)
         ).collect()
     )
     assert got == [(7, 2.0), (8, 5.0)]
@@ -476,18 +472,17 @@ def test_grouped_topn_partitioning_invariant_on_margined_items(spark, sf001_dir)
     assert a == b and len(a) > 0
 
 
-def test_grouped_estimate_tdigest_matches_groupwise_bitwise(spark, sf001_dir):
+def test_grouped_estimate_tdigest_matches_quantile_cont_bitwise(spark, sf001_dir, as_source):
     """The two-level grouped_estimate (per-task digests → states-only
-    exchange → fused readout) must reproduce the rows-to-one-task groupwise
-    form BITWISE in the exact regime: with delta ≥ πN every centroid stays a
-    singleton, so the merged digest holds the identical sorted value multiset
-    whatever the partial split — the property q_tdigest_median_by_type's
-    oracle (quantile_cont) relies on."""
+    exchange → fused readout) over either input kind must equal DuckDB
+    quantile_cont BITWISE in the exact regime: with delta ≥ πN every
+    centroid stays a singleton, so the merged digest holds the identical
+    sorted value multiset whatever the partial split — the property
+    q_tdigest_median_by_type's oracle relies on."""
     from cms_topn_spark.core import TDigest
     from cms_topn_spark.operators.grouped import grouped_estimate, numeric_slice_ingest
-    from cms_topn_spark.operators.groupwise import groupwise_estimate
 
-    events = spark.read.parquet(os.path.join(sf001_dir, "events.parquet"))
+    path = os.path.join(sf001_dir, "events.parquet")
     args = (
         "event_type",
         "value",
@@ -496,57 +491,27 @@ def test_grouped_estimate_tdigest_matches_groupwise_bitwise(spark, sf001_dir):
         "median_value",
         "double",
     )
-    two_level = {
+    want = dict(
+        _duck_events(sf001_dir).execute(
+            "SELECT event_type, quantile_cont(value, 0.5) FROM events"
+            " WHERE event_type IS NOT NULL GROUP BY event_type"
+        ).fetchall()
+    )
+    got = {
         r["event_type"]: r["median_value"]
-        for r in grouped_estimate(events, *args, ingest=numeric_slice_ingest).collect()
+        for r in grouped_estimate(
+            as_source(path), *args, ingest=numeric_slice_ingest
+        ).collect()
     }
-    one_task = {
-        r["event_type"]: r["median_value"]
-        for r in groupwise_estimate(events, *args).collect()
-    }
-    assert two_level == one_task and len(two_level) > 0
+    assert got == want and len(got) > 0
     # and invariant under a different partitioning of the same rows
     repart = {
         r["event_type"]: r["median_value"]
         for r in grouped_estimate(
-            events.repartition(13), *args, ingest=numeric_slice_ingest
+            spark.read.parquet(path).repartition(13), *args, ingest=numeric_slice_ingest
         ).collect()
     }
-    assert repart == two_level
-
-
-def test_grouped_estimate_parquet_matches_dataframe_form(spark, sf001_dir):
-    """Columnar-direct twin of grouped_estimate: same fold, same states, same
-    readout — medians must match the DataFrame form bitwise."""
-    from cms_topn_spark.core import TDigest
-    from cms_topn_spark.operators.grouped import (
-        grouped_estimate,
-        grouped_estimate_parquet,
-        numeric_slice_ingest,
-    )
-
-    p = os.path.join(sf001_dir, "events.parquet")
-    args = (
-        "event_type",
-        "value",
-        lambda: TDigest(delta=1e7),
-        lambda sk: sk.quantile(0.5),
-        "median_value",
-        "double",
-    )
-    df_form = {
-        r["event_type"]: r["median_value"]
-        for r in grouped_estimate(
-            spark.read.parquet(p), *args, ingest=numeric_slice_ingest
-        ).collect()
-    }
-    direct = {
-        r["event_type"]: r["median_value"]
-        for r in grouped_estimate_parquet(
-            spark, p, *args, ingest=numeric_slice_ingest
-        ).collect()
-    }
-    assert direct == df_form and len(direct) > 0
+    assert repart == want
 
 
 def test_grouped_estimate_default_ingest_dispatches_on_protocol(spark, sf001_dir):

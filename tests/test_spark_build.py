@@ -449,38 +449,37 @@ def test_rare_token_probe_regex_delimiter_matches_spark_split(spark):
         assert got == want
 
 
-def test_sketch_agg_parquet_matches_dataframe_form(spark, sf001_dir):
-    """The columnar-direct global build (one partial per file, no JVM row
-    pivot) merges to byte-identical sketches vs the DataFrame form, for both
-    a CMS build and the composite corpus profile."""
-    import os
+def test_sketch_agg_over_source(sf001_dir, as_source):
+    """The global build over either input kind merges to the same sketch as
+    one driver-side build over the whole column, for both a CMS build and
+    the composite corpus profile. Canonical readout, NOT raw bytes: the
+    serialized frame carries insertion-order seq tie-breakers that
+    legitimately differ with the task split."""
+    import pyarrow.parquet as pq
 
-    from cms_topn_spark.core import CmsTopn
-    from cms_topn_spark.operators.build import sketch_agg, sketch_agg_parquet
-    from cms_topn_spark.plans.profile import corpus_profile, corpus_profile_parquet
-
-    import numpy as np
+    from cms_topn_spark.operators.build import default_ingest, sketch_agg
+    from cms_topn_spark.plans.profile import (
+        _profile_readout,
+        corpus_profile,
+        profile_factory,
+        profile_ingest,
+    )
 
     path = os.path.join(sf001_dir, "events.parquet")
-    a = sketch_agg(
-        spark.read.parquet(path).select("event_type"),
-        lambda: CmsTopn(5, 0.0001, 0.99, update="linear"),
-    )
-    b = sketch_agg_parquet(
-        spark, path, ["event_type"],
-        lambda: CmsTopn(5, 0.0001, 0.99, update="linear"),
-    )
-    # canonical readout, NOT raw bytes: the serialized frame carries
-    # insertion-order seq tie-breakers that legitimately differ when the
-    # two paths split a multi-file input into different task orders
-    assert np.array_equal(a.counters, b.counters)
-    assert dict(a.topn_list()) == dict(b.topn_list())
-    assert a.total == b.total
+    factory = lambda: CmsTopn(5, 0.0001, 0.99, update="linear")
+    got = sketch_agg(as_source(path), factory, columns=["event_type"])
+    want = factory()
+    for rb in pq.read_table(path, columns=["event_type"]).to_batches():
+        default_ingest(want, rb)
+    assert np.array_equal(got.counters, want.counters)
+    assert dict(got.topn_list()) == dict(want.topn_list())
+    assert got.total == want.total
 
     dpath = os.path.join(sf001_dir, "documents.parquet")
-    pa_ = corpus_profile(spark.read.parquet(dpath))
-    pb = corpus_profile_parquet(spark, dpath)
-    assert pa_ == pb
+    want = profile_factory()()
+    for rb in pq.read_table(dpath, columns=["text"]).to_batches():
+        profile_ingest(want, rb)
+    assert corpus_profile(as_source(dpath)) == _profile_readout(want)
 
 
 def test_parquet_direct_row_group_splits(spark, tmp_path):
@@ -492,8 +491,8 @@ def test_parquet_direct_row_group_splits(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from cms_topn_spark.core import CmsTopn
-    from cms_topn_spark.operators.build import sketch_agg_parquet
-    from cms_topn_spark.sources.parquet_direct import parquet_splits
+    from cms_topn_spark.operators.build import sketch_agg
+    from cms_topn_spark.sources.parquet_direct import ParquetSource, parquet_splits
 
     # one "giant" file with 5 row groups of 1000 rows each
     p = str(tmp_path / "big.parquet")
@@ -509,17 +508,18 @@ def test_parquet_direct_row_group_splits(spark, tmp_path):
     pq.write_table(tbl.slice(0, 0), p0)
     sp0 = parquet_splits(p0, split_row_groups=True)
     assert len(sp0) >= 1
-    assert sketch_agg_parquet(
-        spark, p0, ["k"], lambda: CmsTopn(5, update="linear"),
-        split_row_groups=True,
+    assert sketch_agg(
+        ParquetSource(p0, split_row_groups=True),
+        lambda: CmsTopn(5, update="linear"), columns=["k"],
     ).topn_list() == []
 
-    a = sketch_agg_parquet(
-        spark, p, ["k"], lambda: CmsTopn(5, 0.0001, 0.99, update="linear")
+    a = sketch_agg(
+        ParquetSource(p), lambda: CmsTopn(5, 0.0001, 0.99, update="linear"),
+        columns=["k"],
     )
-    b = sketch_agg_parquet(
-        spark, p, ["k"], lambda: CmsTopn(5, 0.0001, 0.99, update="linear"),
-        split_row_groups=True,
+    b = sketch_agg(
+        ParquetSource(p, split_row_groups=True),
+        lambda: CmsTopn(5, 0.0001, 0.99, update="linear"), columns=["k"],
     )
     assert np.array_equal(a.counters, b.counters)
     assert dict(a.topn_list()) == dict(b.topn_list())
@@ -551,18 +551,17 @@ class TestParquetDirectPushdown:
 
     def test_stats_prune_splits_and_values(self, spark, tmp_path):
         from cms_topn_spark.core.kll import KllSketch
-        from cms_topn_spark.operators.build import sketch_agg_parquet
-        from cms_topn_spark.operators.build import numeric_ingest
-        from cms_topn_spark.sources.parquet_direct import parquet_splits
+        from cms_topn_spark.operators.build import numeric_ingest, sketch_agg
+        from cms_topn_spark.sources.parquet_direct import ParquetSource, parquet_splits
 
         p = self._sorted_file(tmp_path)
         flt = [("ts", ">=", 3000)]
         # 5 row groups of 1000 sorted rows; ts>=3000 proves groups 0-2 empty
         assert len(parquet_splits(p, split_row_groups=True)) == 5
         assert len(parquet_splits(p, split_row_groups=True, filters=flt)) == 2
-        sk = sketch_agg_parquet(
-            spark, p, ["v"], lambda: KllSketch(8192),
-            ingest=numeric_ingest, filters=flt, split_row_groups=True,
+        sk = sketch_agg(
+            ParquetSource(p, filters=flt, split_row_groups=True),
+            lambda: KllSketch(8192), numeric_ingest, columns=["v"],
         )
         assert sk.n == 2000  # exactly the rows with ts in [3000, 5000)
 
@@ -571,20 +570,20 @@ class TestParquetDirectPushdown:
         group) still filters exactly, and the filter-only column never
         reaches the fold's schema."""
         from cms_topn_spark.core import CmsTopn
-        from cms_topn_spark.operators.build import sketch_agg_parquet
-        from cms_topn_spark.sources.parquet_direct import parquet_splits
+        from cms_topn_spark.operators.build import sketch_agg
+        from cms_topn_spark.sources.parquet_direct import ParquetSource, parquet_splits
 
         p = self._sorted_file(tmp_path)
         flt = [("tag", "==", "t1")]
         assert len(parquet_splits(p, split_row_groups=True, filters=flt)) == 5
-        sk = sketch_agg_parquet(
-            spark, p, ["tag"], lambda: CmsTopn(5, 0.0001, 0.99, update="linear"),
-            filters=flt,
+        sk = sketch_agg(
+            ParquetSource(p, filters=flt),
+            lambda: CmsTopn(5, 0.0001, 0.99, update="linear"), columns=["tag"],
         )
         assert dict(sk.topn_list()) == {"t1": 1667}  # residue 1 of 5000 rows
-        sk2 = sketch_agg_parquet(
-            spark, p, ["tag"], lambda: CmsTopn(5, 0.0001, 0.99, update="linear"),
-            filters=[("ts", "<", 1500), ("tag", "in", ("t0", "t2"))],
+        sk2 = sketch_agg(
+            ParquetSource(p, filters=[("ts", "<", 1500), ("tag", "in", ("t0", "t2"))]),
+            lambda: CmsTopn(5, 0.0001, 0.99, update="linear"), columns=["tag"],
         )
         # conjunction: rows 0..1499 with tag in {t0,t2} = 1500 - |t1 rows|
         assert sum(dict(sk2.topn_list()).values()) == 1000
@@ -595,28 +594,30 @@ class TestParquetDirectPushdown:
         import pyarrow.parquet as pq
 
         from cms_topn_spark.core import CmsTopn
-        from cms_topn_spark.operators.build import sketch_agg_parquet
+        from cms_topn_spark.operators.build import sketch_agg
+        from cms_topn_spark.sources.parquet_direct import ParquetSource
 
         p = str(tmp_path / "nulls.parquet")
         pq.write_table(
             pa.table({"k": ["a", "b", None, "a", None], "x": [1, 2, 3, 4, 5]}), p
         )
-        sk = sketch_agg_parquet(
-            spark, p, ["x"], lambda: CmsTopn(5, update="linear"),
-            filters=[("k", "!=", "b")],
+        sk = sketch_agg(
+            ParquetSource(p, filters=[("k", "!=", "b")]),
+            lambda: CmsTopn(5, update="linear"), columns=["x"],
         )
         assert sk.total == 2  # rows x=1 and x=4; NULL k rows dropped
 
     def test_all_pruned_falls_back_to_empty_result(self, spark, tmp_path):
         from cms_topn_spark.core import CmsTopn
-        from cms_topn_spark.operators.build import sketch_agg_parquet
-        from cms_topn_spark.sources.parquet_direct import parquet_splits
+        from cms_topn_spark.operators.build import sketch_agg
+        from cms_topn_spark.sources.parquet_direct import ParquetSource, parquet_splits
 
         p = self._sorted_file(tmp_path)
         flt = [("ts", ">", 10_000_000)]
         assert parquet_splits(p, split_row_groups=True, filters=flt) == [(p, -1)]
-        sk = sketch_agg_parquet(
-            spark, p, ["tag"], lambda: CmsTopn(5, update="linear"), filters=flt
+        sk = sketch_agg(
+            ParquetSource(p, filters=flt), lambda: CmsTopn(5, update="linear"),
+            columns=["tag"],
         )
         assert sk is None or sk.topn_list() == []
 
@@ -625,10 +626,8 @@ class TestParquetDirectPushdown:
     ):
         from pyspark.sql import functions as F
 
-        from cms_topn_spark.operators.grouped import (
-            grouped_quantiles,
-            grouped_quantiles_parquet,
-        )
+        from cms_topn_spark.operators.grouped import grouped_quantiles
+        from cms_topn_spark.sources.parquet_direct import ParquetSource
 
         path = os.path.join(sf001_dir, "events.parquet")
         a = sorted(
@@ -640,9 +639,9 @@ class TestParquetDirectPushdown:
         )
         b = sorted(
             tuple(r)
-            for r in grouped_quantiles_parquet(
-                spark, path, "user_id", "value", k=4096,
-                filters=[("event_type", "==", "click")],
+            for r in grouped_quantiles(
+                ParquetSource(path, filters=[("event_type", "==", "click")]),
+                "user_id", "value", k=4096,
             ).collect()
         )
         assert a == b and len(a) > 0
@@ -661,3 +660,57 @@ class TestParquetDirectPushdown:
         # None inside 'in' would pass NULL rows through pc.is_in
         with pytest.raises(ValueError, match="None inside 'in'"):
             parquet_splits(p, filters=[("tag", "in", ("t1", None))])
+
+
+def test_parquet_source_sharding_rule(spark, sf001_dir):
+    """On a one-file ParquetSource, the layout-independent folds (quantiles,
+    estimate, distinct) shard stage 1 out to defaultParallelism tasks; the
+    top-n, states and global-build forms, whose top-n retained set depends
+    on the task layout, run one task per file."""
+    import uuid
+
+    from cms_topn_spark.core import TDigest
+    from cms_topn_spark.operators.build import sketch_agg
+    from cms_topn_spark.operators.grouped import (
+        grouped_distinct,
+        grouped_estimate,
+        grouped_quantiles,
+        grouped_sketch_states,
+        grouped_topn,
+    )
+    from cms_topn_spark.sources.parquet_direct import ParquetSource
+
+    path = os.path.join(sf001_dir, "events.parquet")
+    src = ParquetSource(path)
+    assert len(src.splits) == 1
+    sc = spark.sparkContext
+
+    def stage1_tasks(run) -> int:
+        group = f"stage1-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        st = sc.statusTracker()
+        stages = [s for j in st.getJobIdsForGroup(group) for s in st.getJobInfo(j).stageIds]
+        return st.getStageInfo(min(stages)).numTasks
+
+    cms = lambda: CmsTopn(5, 0.0001, 0.99, update="linear")
+    sharded = {
+        "quantiles": lambda: grouped_quantiles(src, "user_id", "value").collect(),
+        "estimate": lambda: grouped_estimate(
+            src, "event_type", "value", lambda: TDigest(delta=1e7),
+            lambda sk: sk.quantile(0.5), "m", "double",
+        ).collect(),
+        "distinct": lambda: grouped_distinct(src, "event_type", "user_id").collect(),
+    }
+    per_file = {
+        "topn": lambda: grouped_topn(src, "event_type", "user_id", 5).collect(),
+        "states": lambda: grouped_sketch_states(src, "event_type", "user_id", cms).collect(),
+        "sketch_agg": lambda: sketch_agg(src, cms, columns=["event_type"]),
+    }
+    got = {name: stage1_tasks(run) for name, run in {**sharded, **per_file}.items()}
+    want = {name: sc.defaultParallelism for name in sharded}
+    want.update({name: 1 for name in per_file})
+    assert sc.defaultParallelism > 1 and got == want

@@ -8,7 +8,9 @@ A blind redirect erases that history (it happened in round 7; restored).
 """
 # The generation logic lives inline in the committed BENCH/PLANS.md header;
 # regenerate by running the script body from the repo root:
+import shutil
 import sys
+import tempfile
 
 sys.path.insert(0, ".")
 
@@ -57,8 +59,11 @@ if __name__ == "__main__":
         grep=("Join", "Exchange"),
         fmt="simple",
     )
+    # near-dup stage plans: both gate queries eagerly localCheckpoint their
+    # result, so their query plans show only the post-checkpoint tail;
+    # materialize=False is the plan the eager path runs before that
     show(
-        "MinHash LSH pairs (single-pass features)",
+        "Near-dup stage: MinHash LSH pairs (single-pass features)",
         dedup.minhash_lsh_pairs(docs, 0.8, materialize=False),
         "ONE MapInArrow pass emits band keys + gram-hash sets; the exact "
         "verify joins candidate pairs straight back to the cached per-doc "
@@ -66,6 +71,26 @@ if __name__ == "__main__":
         grep=("Join", "Exchange", "MapInArrow", "InMemory"),
         fmt="simple",
     )
+    from pyspark.sql import functions as F
+
+    idx_dir = tempfile.mkdtemp(prefix="plans_minhash_idx_")
+    try:
+        idx = dedup.minhash_index_build(docs.where(F.col("doc_id") % 3 != 0), idx_dir)
+        batch = docs.where((F.col("doc_id") % 3 == 0) & (F.col("doc_id") % 50 == 0))
+        show(
+            "Near-dup stage: incremental near-dup against a bucketed index",
+            dedup.incremental_near_dup(
+                batch, idx, 0.8, materialize=False, index_dir=idx_dir
+            ),
+            "a small batch (doc_id % 3 == 0 and doc_id % 50 == 0), disjoint "
+            "from the persisted index (doc_id % 3 != 0): its bucket set is a "
+            "strict subset of the 256 key buckets — the regime where the "
+            "bucketed bands.parquet read can prune to the buckets it touches",
+            grep=("Join", "Exchange", "MapInArrow", "Scan"),
+            fmt="simple",
+        )
+    finally:
+        shutil.rmtree(idx_dir, ignore_errors=True)
     emb = spark.read.parquet(sf + "/embeddings.parquet")
     show(
         "Cosine near-dup (bucketed)",
