@@ -87,9 +87,9 @@ def q_cms_topn_doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     Result-identical — the linear-update counters are additive and the
     capacity-exceeds-vocabulary regime retains every token, so partitioning
     cannot change the output."""
-    from cms_topn_spark.operators.build import spread_small_input
+    from cms_topn_spark.sources.parquet_direct import spread
 
-    toks = spread_small_input(
+    toks = spread(
         _t(spark, sf_dir, "documents").select("text")
     ).select(F.explode(F.split(F.col("text"), " ")).alias("tok"))
     sk = cms_topn_add_agg(toks, "tok", n=40, e=0.0001)

@@ -26,7 +26,9 @@ from .cms_topn import CmsTopn, sizing
 # importing the module REGISTERS serialization kind 7: without this, a
 # worker that only imported core/operators (e.g. a tree-merge task
 # unpickling _merge_group) could not deserialize a composite state and the
-# flagship/profile job would die exactly at >direct_collect_limit partitions
+# flagship/profile job would die exactly when its partial count crosses the
+# driver-collect limit (operators.build._DIRECT_COLLECT_LIMIT) and the tree
+# merge takes over
 from .composite import CompositeSketch  # noqa: E402  (registration side effect)
 from .hll import HyperLogLog
 from .kll import KllSketch

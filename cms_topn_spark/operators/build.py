@@ -38,6 +38,12 @@ from ..core import encoding as enc
 from ..core.base import merge_serialized, sketch_from_bytes
 from ..sources.parquet_direct import Source, map_source, source_partitions
 
+# merge strategy of a global build: up to _DIRECT_COLLECT_LIMIT partials are
+# collected in one action and folded on the driver; above it a tree of
+# _FANIN-way merge levels first shrinks them to at most _FANIN rows
+_FANIN = 16
+_DIRECT_COLLECT_LIMIT = 64
+
 STATE_SCHEMA = "partition_id int, state binary, input_rows long, build_wall_ms long"
 
 _PA_STATE_SCHEMA = pa.schema(
@@ -120,60 +126,6 @@ def numeric_ingest(sketch, batch: pa.RecordBatch) -> None:
     sketch.add_batch(arr.to_numpy(zero_copy_only=False).astype(np.float64))
 
 
-_NPARTS_CACHE: dict = {}
-
-
-def plan_num_partitions(df: DataFrame) -> int:
-    """Partition count of a DataFrame, memoized by the plan's semantic hash.
-
-    ``df.rdd.getNumPartitions()`` is the only public API but forces a
-    plan→RDD conversion (~10 ms fixed driver cost) per call; memoizing makes
-    repeated operator calls over the same source (the bench-loop shape)
-    probe once. A hash collision can only mis-route a perf-only heuristic
-    (direct-collect vs tree-merge, spread-or-not), never correctness —
-    cheaper than materializing the states frame through the block cache,
-    which costs ~0.3 s per call for MB-sized sketch states."""
-    # keyed per Spark application: a new session (different parallelism /
-    # file layout) must not inherit counts. Within one session, rewriting
-    # the same path with a different file count can still serve a stale
-    # count — acceptable because every consumer is a perf-only heuristic;
-    # callers that DO rewrite inputs in-session call
-    # invalidate_num_partitions_cache() after the rewrite.
-    key = (df.sparkSession.sparkContext.applicationId, df.semanticHash())
-    n = _NPARTS_CACHE.get(key)
-    if n is None:
-        if len(_NPARTS_CACHE) > 256:
-            _NPARTS_CACHE.clear()
-        n = _NPARTS_CACHE[key] = df.rdd.getNumPartitions()
-    return n
-
-
-def spread_small_input(df: DataFrame) -> DataFrame:
-    """Round-robin an under-partitioned input up to the cluster's default
-    parallelism — the small-file remedy for compute-bound pipelines whose
-    scan is a single split (a one-file gate table serializes tokenize/regex
-    work on one core). No-op whenever the plan already has >= cores
-    partitions (any real corpus), so nothing extra moves at scale; callers
-    must be partition-layout-independent (aggregations, per-row maps —
-    not bounded top-n retained sets with order-broken ties)."""
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    if plan_num_partitions(df) < parallelism:
-        df = df.repartition(parallelism)
-    return df
-
-
-def invalidate_num_partitions_cache(df: DataFrame | None = None) -> None:
-    """Drop memoized partition counts — the cache-bypass hook for callers
-    that rewrite an input path within one Spark application (the memo would
-    otherwise serve the pre-rewrite file count to the perf heuristics).
-    With ``df``, evicts that plan's entry; with no argument, clears all."""
-    if df is None:
-        _NPARTS_CACHE.clear()
-        return
-    key = (df.sparkSession.sparkContext.applicationId, df.semanticHash())
-    _NPARTS_CACHE.pop(key, None)
-
-
 def _partials_fold(
     factory: Callable[[], object],
     ingest: Callable[[object, pa.RecordBatch], None],
@@ -246,7 +198,7 @@ def _merge_group(pdf):
     )
 
 
-def tree_merge_df(states: DataFrame, fanin: int = 16) -> DataFrame:
+def tree_merge_df(states: DataFrame, fanin: int = _FANIN) -> DataFrame:
     """Merge a states DataFrame down to ≤ ``fanin`` rows with a bounded-fan-in
     tree: each level buckets by partition_id // fanin and merges per bucket via
     applyInPandas. O(log_fanin P) levels; each level is a small shuffle of
@@ -277,8 +229,6 @@ def sketch_agg(
     factory: Callable[[], object],
     ingest: Callable[[object, pa.RecordBatch], None] = default_ingest,
     salt_partitions: int | None = None,
-    fanin: int = 16,
-    direct_collect_limit: int = 64,
     columns: list[str] | None = None,
 ):
     """Full add_agg analogue: build partials, tree-merge, return the sketch.
@@ -289,20 +239,23 @@ def sketch_agg(
     For moderate partition counts the partials are collected in ONE action and
     merged on the driver (P sketch-sized rows; merging is O(P·d·w) numpy adds,
     microseconds per state). The shuffle tree only pays off when P is large —
-    at 1000-executor scale — so it kicks in above ``direct_collect_limit``.
+    at 1000-executor scale — so it kicks in above ``_DIRECT_COLLECT_LIMIT``.
     P is the DataFrame's partition count, or a ParquetSource's split count
     (one partial per file, or per row group) — the same split list feeds
     the tasks, so its footers are read once. No sharding: a small input
     stays one partial per split."""
     states = build_partials(src, factory, ingest, salt_partitions, columns)
     n_parts = source_partitions(src) if salt_partitions is None else salt_partitions
-    return _collect_states(states, n_parts, fanin, direct_collect_limit)
+    return collect_states(states, tree=n_parts > _DIRECT_COLLECT_LIMIT)
 
 
-def _collect_states(states: DataFrame, n_parts: int, fanin: int, direct_collect_limit: int):
+def collect_states(states: DataFrame, tree: bool):
+    """Merge a states frame into one live sketch on the driver (None when
+    every state is NULL). ``tree`` first runs :func:`tree_merge_df`, so at
+    most ``_FANIN`` rows are collected."""
     merged_df = None
-    if n_parts > direct_collect_limit:
-        states = merged_df = tree_merge_df(states, fanin)
+    if tree:
+        states = merged_df = tree_merge_df(states)
     rows = states.collect()
     if merged_df is not None:
         merged_df.unpersist()  # tree_merge_df leaves its last level cached

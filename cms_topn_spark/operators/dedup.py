@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core.murmur import hash128
+from ..sources.parquet_direct import parallelism_floor, spread
 from ..sources.webpages import _splitmix64  # deterministic counter-based hash
 
 U64 = np.uint64
@@ -566,16 +567,6 @@ def _band_keys_from_sig(sig: np.ndarray) -> np.ndarray:
     return key
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Signature work is CPU-bound in the worker: spread an under-partitioned
-    corpus across the cluster before the mapInArrow (no-op at real scale,
-    where the input already has >= cores partitions). Shared helper —
-    see build.spread_small_input."""
-    from .build import spread_small_input
-
-    return spread_small_input(df)
-
-
 # docs per kernel invocation: bounds every intermediate (gram buffer,
 # lexsort temps, murmur matrix, signature chunk) to a few MB so the whole
 # pass stays cache-resident — measured 2.5× faster than whole-batch arrays
@@ -605,7 +596,7 @@ def minhash_doc_features(
     The gram hashes are already computed for the signatures, so emitting
     them costs one Arrow column, not a second scan — the verify stage then
     never recomputes shingles or rejoins the corpus text."""
-    df = _spread(df)
+    df = spread(df)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for whole in batches:
@@ -940,7 +931,12 @@ def _verify_gram_pairs(cand: DataFrame, feats: DataFrame, threshold: float) -> D
     # repartition of 16-byte id rows costs nothing and restores kernel
     # parallelism whatever join strategy fires; at real scale the pair set
     # is large and the spread is what you want anyway.
-    cand = cand.repartition(cand.sparkSession.sparkContext.defaultParallelism)
+    # This only pays while the gram-array joins broadcast (as they do at
+    # the bench and gate scales): under sort-merge joins the next hash
+    # exchange on a_id supersedes the round-robin, which is then one wasted
+    # shuffle of id pairs. Co-partitioning the pairs and feats by doc id
+    # (ROADMAP item 2) replaces it.
+    cand = cand.repartition(parallelism_floor())
     fa = feats.select(F.col("doc_id").alias("a_id"), F.col("grams").alias("gs_a"))
     fb = feats.select(F.col("doc_id").alias("b_id"), F.col("grams").alias("gs_b"))
     paired = cand.join(fa, "a_id").join(fb, "b_id").select(
@@ -1153,7 +1149,7 @@ def winnow_fingerprints(
     k-gram rolling-hash sequence → min hash per sliding window of ``window``
     positions → distinct selected hashes per doc. Robust to local edits; the
     standard plagiarism/near-dup fingerprint. Output: (doc_id, fp) rows."""
-    df = _spread(df)
+    df = spread(df)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
@@ -1264,7 +1260,7 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> Da
     SQL-renderable kernel winnowing uses — so the ENTIRE signature scheme
     (distinct grams → per-bit ±1 votes → sign bits) has a bit-exact DuckDB
     oracle (:func:`simhash_sql`)."""
-    df = _spread(df)
+    df = spread(df)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         # per-chunk kernel calls: the bit-vote stage allocates (8, n_grams)

@@ -31,10 +31,10 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from ..core.base import merge_serialized
-from ..sources.parquet_direct import ParquetSource, Source, map_source, source_types
+from ..sources.parquet_direct import ParquetSource, Source, map_source, parallelism_floor, source_types
 from .build import pack_arrow_array
 
 
@@ -164,9 +164,10 @@ def _fold_partition_states(
     states: DataFrame, group_col: str
 ) -> tuple[DataFrame, Callable]:
     """Shared stage-2 shape: hash-repartition the (group, state) partials by
-    group and return (repartitioned frame, per-partition folder) — the
-    folder walks a partition's pandas chunks once and merges every group's
-    states into a dict. One Python-side fold per PARTITION instead of one
+    group into :func:`parallelism_floor` partitions and return
+    (repartitioned frame, per-partition folder) — the folder walks a
+    partition's pandas chunks once and merges every group's states into a
+    dict. One Python-side fold per PARTITION instead of one
     ``applyInPandas`` slice per GROUP: at high group cardinality the
     per-group overhead (a pandas frame sliced in and another built out per
     group, ~0.5 ms each) dominated the whole operator — 15k groups cost
@@ -174,7 +175,6 @@ def _fold_partition_states(
     same exchange. Merge order within a group is arrival order, exactly as
     unordered as the applyInPandas row order was; all gated readouts run in
     merge-order-independent regimes."""
-    P = states.sparkSession.sparkContext.defaultParallelism
 
     def fold(pdfs: Iterator[pd.DataFrame]) -> dict:
         groups: dict = {}
@@ -183,7 +183,7 @@ def _fold_partition_states(
                 groups[g] = merge_serialized(groups.get(g), bytes(st))
         return groups
 
-    return states.repartition(P, group_col), fold
+    return states.repartition(parallelism_floor(), group_col), fold
 
 
 def _merge_states(states: DataFrame, group_col: str, gtype: str) -> DataFrame:
@@ -276,16 +276,17 @@ def _partial_states(
     value_col: str,
     factory: Callable[[], object],
     ingest: Callable[[object, pa.Array], None] = _packed_slice_ingest,
-    min_splits: int | None = None,
+    shard: bool = False,
 ) -> tuple[DataFrame, str]:
     """Stage 1 only: the shuffle-free per-(task, group) partial states (and
     the group type) — the input both the states API and the fused
     merge-readouts consume.
 
-    ``min_splits``: when set (the quantile/distinct/estimate forms pass the
-    core count), a small ParquetSource (one single-row-group file — the gate
-    tables' shape) is row-range-sharded so the fold runs at scan
-    parallelism instead of one task per file (parquet_direct.shard_splits).
+    ``shard``: when set (the quantile/distinct/estimate forms set it), a
+    small ParquetSource (one single-row-group file — the gate tables'
+    shape) is row-range-sharded up to the parallelism floor so the fold
+    runs at scan parallelism instead of one task per file
+    (parquet_direct.shard_splits).
     Only callers whose merged result is partition-layout-independent may
     set it (KLL/HLL/t-digest merges; bitwise so in the exact regimes the
     gates run in) — CMS top-n retained sets break boundary ties by merge
@@ -297,14 +298,10 @@ def _partial_states(
         map_source(
             src, [group_col, value_col], _state_fold(group_col, value_col, factory, ingest),
             f"{group_col} {gtype}, state binary",
-            min_splits=min_splits, not_null=group_col,
+            shard=shard, not_null=group_col,
         ),
         gtype,
     )
-
-
-def _parallelism() -> int:
-    return SparkSession.active().sparkContext.defaultParallelism
 
 
 def grouped_probe(
@@ -406,7 +403,7 @@ def grouped_quantiles(
         raise ValueError("qs and q_names must have the same length")
     partials, gtype = _partial_states(
         src, group_col, value_col, lambda: KllSketch(k),
-        ingest=numeric_slice_ingest, min_splits=_parallelism(),
+        ingest=numeric_slice_ingest, shard=True,
     )
     return _merge_readout(
         partials, group_col, gtype, _quantile_cols(qs, q_names),
@@ -453,7 +450,7 @@ def grouped_estimate(
     ``delta ≥ πN`` — singleton centroids survive any merge order), which is
     exactly the regime the correctness gates run in."""
     partials, gtype = _partial_states(
-        src, group_col, value_col, factory, ingest, min_splits=_parallelism()
+        src, group_col, value_col, factory, ingest, shard=True
     )
     return _merge_readout(
         partials, group_col, gtype,

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.parquet_direct import spread
 from .textops import lang_pred_from_hit_cols, lang_pred_sql, stage_stopword_hits
 
 # defaults chosen against the synthetic corpus distributions: alpha ratio
@@ -55,13 +56,11 @@ def curate(
     the feature projection (no-CSE-through-lambdas: inlined, each split ran
     up to 3× per row on the full-corpus hot path). A single-split input is
     round-robin-spread first so the regex/tokenize feature pass runs at
-    cluster parallelism — no-op at scale (build.spread_small_input); every
+    cluster parallelism — no-op at scale (parquet_direct.spread); every
     downstream step (gates are per-row, dedup is a groupBy min) is
     partitioning-independent."""
-    from .build import spread_small_input
-
     staged = stage_stopword_hits(
-        spread_small_input(df.select(id_col, text_col)), text_col
+        spread(df.select(id_col, text_col)), text_col
     ).withColumn(
         "_tk", F.expr(f"split({text_col}, ' ')")
     )

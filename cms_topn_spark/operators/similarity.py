@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..sources.parquet_direct import parallelism_floor
 from ..sources.webpages import _splitmix64
 
 U64 = np.uint64
@@ -223,10 +224,8 @@ def cosine_near_dup_pairs_blocked(
     prunes the cogroup's right-side input columns down to the grouping key
     (observed: the UDF receives only ``pk`` on the right under
     ``df.count()``)."""
-    spark = df.sparkSession
     if n_blocks is None:
-        par = spark.sparkContext.defaultParallelism
-        n_blocks = max(2, int(np.ceil(np.sqrt(4 * par))))
+        n_blocks = max(2, int(np.ceil(np.sqrt(4 * parallelism_floor()))))
     B = int(n_blocks)
 
     src = df.select(

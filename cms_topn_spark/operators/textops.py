@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.parquet_direct import spread
+
 BPE_ISH = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"
 
 STOPWORDS = {
@@ -352,14 +354,12 @@ def tfidf_top_terms(
     defect). One scan, one tf shuffle. At petabyte scale this stage goes to
     a parquet intermediate instead. A single-split input (one small file)
     is round-robin-spread first so tokenize + partial aggregation run at
-    cluster parallelism — no-op at scale (build.spread_small_input); the
+    cluster parallelism — no-op at scale (parquet_direct.spread); the
     output is partitioning-independent (exact counts, deterministic
     ranking)."""
     from pyspark.sql.window import Window
 
-    from .build import spread_small_input
-
-    tok = spread_small_input(df.select(F.col(id_col), F.col(text_col))).select(
+    tok = spread(df.select(F.col(id_col), F.col(text_col))).select(
         F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("term")
     )
     tf = (

@@ -27,6 +27,13 @@ helpers below (:func:`source_types`, :func:`map_source`,
 :func:`source_partitions`) are the only code that tells the two kinds
 apart.
 
+The module also owns the library's one answer to "is this input too small
+to parallelize?": :func:`parallelism_floor`. A DataFrame with fewer
+partitions than the floor is round-robined up to it (:func:`spread`); a
+ParquetSource fold that opts in (``shard=True``) has its split list
+row-range sharded up to it (:func:`shard_splits`). Both are no-ops once an
+input already has the floor's worth of tasks.
+
 Column pruning happens via the operator's columns (pyarrow reads only
 those column chunks); each file is one task, so the scan parallelism is the
 file count — the same unit a 100-TB Iceberg table's manifest hands out.
@@ -106,20 +113,20 @@ def map_source(
     columns: list[str] | None,
     fold: Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]],
     out_schema: str,
-    min_splits: int | None = None,
+    shard: bool = False,
     not_null: str | None = None,
 ) -> DataFrame:
     """Run ``fold`` (a ``mapInArrow`` function) over ``columns`` of ``src``.
 
     A DataFrame goes through ``select(columns).mapInArrow`` (``columns=None``
     keeps it as projected); a :class:`ParquetSource` through
-    :func:`map_parquet_batches` in the active Spark session, fanned out to
-    ``min_splits`` tasks when its split list is shorter (a DataFrame keeps
+    :func:`map_parquet_batches` in the active Spark session, sharded up to
+    :func:`parallelism_floor` tasks when ``shard`` is set (a DataFrame keeps
     its own partitioning). ``not_null`` adds a Catalyst ``isNotNull`` filter
     on a DataFrame, which reaches its scan; a ParquetSource has no Catalyst
     layer, so a fold given ``not_null`` must drop those rows itself."""
     if isinstance(src, ParquetSource):
-        return map_parquet_batches(src, columns, fold, out_schema, min_splits)
+        return map_parquet_batches(src, columns, fold, out_schema, shard)
     if not_null is not None:
         src = src.where(F.col(not_null).isNotNull())
     if columns is not None:
@@ -133,9 +140,56 @@ def source_partitions(src: Source) -> int:
     (the same list :func:`map_source` hands to the tasks)."""
     if isinstance(src, ParquetSource):
         return len(src.splits)
-    from ..operators.build import plan_num_partitions
-
     return plan_num_partitions(src)
+
+
+def parallelism_floor() -> int:
+    """The task count below which an input counts as too small to
+    parallelize: the active session's default parallelism (its core count
+    in local mode). Every spread, shard and stage-2 partition count in the
+    library reads this one value."""
+    return SparkSession.active().sparkContext.defaultParallelism
+
+
+_NPARTS_CACHE: dict = {}
+
+
+def plan_num_partitions(df: DataFrame) -> int:
+    """Partition count of a DataFrame, memoized by the plan's semantic hash.
+
+    ``df.rdd.getNumPartitions()`` is the only public API but forces a
+    plan→RDD conversion (50–115 ms on a fresh parquet frame, 4 cores) per
+    call; memoizing makes repeated operator calls over the same source (the
+    bench-loop shape) probe once. A hash collision can only mis-route a
+    perf-only heuristic (direct collect vs tree merge, spread or not), never
+    correctness — cheaper than materializing the states frame through the
+    block cache, which costs ~0.3 s per call for MB-sized sketch states."""
+    # keyed per Spark application: a new session (different parallelism /
+    # file layout) must not inherit counts. Within one session, rewriting
+    # the same path with a different file count can still serve a stale
+    # count — acceptable because every consumer is a perf-only heuristic.
+    key = (df.sparkSession.sparkContext.applicationId, df.semanticHash())
+    n = _NPARTS_CACHE.get(key)
+    if n is None:
+        if len(_NPARTS_CACHE) > 256:
+            _NPARTS_CACHE.clear()
+        n = _NPARTS_CACHE[key] = df.rdd.getNumPartitions()
+    return n
+
+
+def spread(df: DataFrame) -> DataFrame:
+    """Round-robin a DataFrame with fewer partitions than
+    :func:`parallelism_floor` up to the floor — the small-file remedy for
+    compute-bound passes whose scan is a single split (a one-file gate
+    table serializes tokenize/regex/signature work on one core). No-op
+    whenever the plan already has the floor's partitions (any real corpus),
+    so nothing extra moves at scale. Callers must be partition-layout
+    independent (aggregations, per-row maps — not bounded top-n retained
+    sets with order-broken ties)."""
+    floor = parallelism_floor()
+    if plan_num_partitions(df) < floor:
+        df = df.repartition(floor)
+    return df
 
 
 def parquet_files(path: str) -> list[str]:
@@ -273,9 +327,9 @@ def _filter_mask(rb: pa.RecordBatch, filters):
 
 
 def shard_splits(
-    splits: list[tuple[str, int]], min_splits: int
+    splits: list[tuple[str, int]], floor: int
 ) -> list[tuple[str, int, int, int]]:
-    """Fan a too-short split list out to ~``min_splits`` tasks by row RANGES:
+    """Fan a too-short split list out to ~``floor`` tasks by row RANGES:
     each (path, row_group) split becomes n ≥ 1 shards (path, row_group,
     shard, n_shards), shard i folding rows [i·rows/n, (i+1)·rows/n) of its
     split. The small-input remedy for the one-task-per-file rule: a single
@@ -288,7 +342,7 @@ def shard_splits(
     merged result is partition-layout-independent (the mergeable-sketch
     contract all consumers of this source satisfy)."""
     base = [(p, rg, 0, 1) for p, rg in splits]
-    if len(splits) >= min_splits or min_splits <= 1:
+    if len(splits) >= floor or floor <= 1:
         return base
     import pyarrow.parquet as pq
 
@@ -301,7 +355,7 @@ def shard_splits(
         return base
     out: list[tuple[str, int, int, int]] = []
     for (p, rg), cnt in zip(splits, counts):
-        n = max(1, min(round(min_splits * cnt / total), cnt))
+        n = max(1, min(round(floor * cnt / total), cnt))
         out.extend((p, rg, i, n) for i in range(n))
     return out
 
@@ -311,11 +365,14 @@ def map_parquet_batches(
     columns: list[str],
     fold: Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]],
     out_schema: str,
-    min_splits: int | None = None,
+    shard: bool = False,
 ) -> DataFrame:
     """Run ``fold`` (a batches→batches kernel, same contract as a
     ``mapInArrow`` function) over ``columns`` of ``src``, one task per
     split of ``src.splits``, reading columnar-direct in the worker.
+    ``shard`` row-range shards a split list shorter than
+    :func:`parallelism_floor` up to the floor (:func:`shard_splits`); only
+    folds whose merged result is layout-independent may set it.
 
     ``use_threads=False`` on the pyarrow reader: each task is already one
     core's worth of work — per-task thread pools would oversubscribe the
@@ -339,9 +396,7 @@ def map_parquet_batches(
     semantics are SQL WHERE's: NULLs never pass."""
     filters = src.filters
     spark = SparkSession.active()
-    # ``min_splits`` (see shard_splits): fan small split lists out by row
-    # ranges so the fold's parallelism isn't capped by the file count
-    sharded = shard_splits(src.splits, min_splits or 0)
+    sharded = shard_splits(src.splits, parallelism_floor() if shard else 0)
     # exactly one split per partition: parallelize's deterministic list
     # slicing, NOT .repartition(n) — round-robin starts at a random offset
     # per input partition, so splits can collide into one task and leave

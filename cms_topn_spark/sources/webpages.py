@@ -25,6 +25,8 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .parquet_direct import parallelism_floor
+
 U64 = np.uint64
 
 N_HOSTS = 1000
@@ -132,7 +134,7 @@ def _columns_for_ids(ids: np.ndarray) -> dict:
 
 def generate_webpages(spark: SparkSession, n_docs: int, partitions: int | None = None) -> DataFrame:
     """Distributed deterministic generation: spark.range → mapInArrow."""
-    rng = spark.range(0, n_docs, 1, partitions or spark.sparkContext.defaultParallelism)
+    rng = spark.range(0, n_docs, 1, partitions or parallelism_floor())
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:

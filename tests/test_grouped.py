@@ -4,6 +4,7 @@ sketch aggregation)."""
 import os
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from cms_topn_spark.core import CmsTopn, sketch_from_bytes
@@ -303,22 +304,19 @@ def test_dice_byte_bound_flush_preserves_results(spark, sf001_dir, monkeypatch):
                 assert sk.estimate(int(uid)) == c
 
 
-def test_invalidate_num_partitions_cache(spark):
-    from cms_topn_spark.operators.build import (
-        _NPARTS_CACHE,
-        invalidate_num_partitions_cache,
-        plan_num_partitions,
-    )
+def test_num_partitions_memo(spark, monkeypatch):
+    from cms_topn_spark.sources.parquet_direct import _NPARTS_CACHE, plan_num_partitions
 
     df = spark.range(0, 100, 1, 7)
+    # an entry for the same plan under another application is never served
+    _NPARTS_CACHE[("other-app", df.semanticHash())] = 99
     assert plan_num_partitions(df) == 7
-    key = (spark.sparkContext.applicationId, df.semanticHash())
-    assert key in _NPARTS_CACHE
-    invalidate_num_partitions_cache(df)
-    assert key not in _NPARTS_CACHE
-    assert plan_num_partitions(df) == 7  # re-probes after eviction
-    invalidate_num_partitions_cache()
-    assert not _NPARTS_CACHE
+    assert _NPARTS_CACHE[(spark.sparkContext.applicationId, df.semanticHash())] == 7
+    # a repeat call is answered from the memo, without planning an RDD
+    monkeypatch.setattr(
+        type(df), "rdd", property(lambda self: pytest.fail("memo bypassed"))
+    )
+    assert plan_num_partitions(df) == 7
 
 
 def _duck_events(sf001_dir):

@@ -666,7 +666,8 @@ def test_parquet_source_sharding_rule(spark, sf001_dir):
     """On a one-file ParquetSource, the layout-independent folds (quantiles,
     estimate, distinct) shard stage 1 out to defaultParallelism tasks; the
     top-n, states and global-build forms, whose top-n retained set depends
-    on the task layout, run one task per file."""
+    on the task layout, run one task per file. A DataFrame below the floor
+    is round-robined up to it; one at the floor is left as it is."""
     import uuid
 
     from cms_topn_spark.core import TDigest
@@ -678,7 +679,7 @@ def test_parquet_source_sharding_rule(spark, sf001_dir):
         grouped_sketch_states,
         grouped_topn,
     )
-    from cms_topn_spark.sources.parquet_direct import ParquetSource
+    from cms_topn_spark.sources.parquet_direct import ParquetSource, parallelism_floor, spread
 
     path = os.path.join(sf001_dir, "events.parquet")
     src = ParquetSource(path)
@@ -714,3 +715,34 @@ def test_parquet_source_sharding_rule(spark, sf001_dir):
     want = {name: sc.defaultParallelism for name in sharded}
     want.update({name: 1 for name in per_file})
     assert sc.defaultParallelism > 1 and got == want
+
+    floor = parallelism_floor()
+    assert floor == sc.defaultParallelism
+
+    def physical(df) -> str:
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    assert f"RoundRobinPartitioning({floor})" in physical(spread(spark.range(0, 100, 1, 1)))
+    wide = spark.range(0, 100, 1, floor)
+    assert spread(wide) is wide and "Exchange" not in physical(wide)
+
+
+def test_default_parallelism_read_in_one_function():
+    """``parquet_direct.parallelism_floor`` is the library's only read of
+    the session's default parallelism: no operator keeps a rule of its own."""
+    import ast
+    import pathlib
+
+    import cms_topn_spark
+
+    root = pathlib.Path(cms_topn_spark.__file__).parent
+    readers, total = set(), 0
+    for path in sorted(root.rglob("*.py")):
+        text = path.read_text()
+        total += text.count("defaultParallelism")
+        for node in ast.walk(ast.parse(text)):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                if "defaultParallelism" in ast.get_source_segment(text, node):
+                    readers.add(f"{path.relative_to(root)}:{node.name}")
+    assert readers == {"sources/parquet_direct.py:parallelism_floor"}
+    assert total == 1
